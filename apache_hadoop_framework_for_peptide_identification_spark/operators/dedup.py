@@ -17,7 +17,7 @@ Four tiers, all shuffle-bounded (no all-pairs comparison anywhere):
                       (xxhash64 via higher-order functions) — no Python
                       in the hot path.
 - simhash:            64-bit SimHash via an Arrow-vectorized pandas UDF;
-                      near-dups collide on prefix bands.
+                      near-dups collide on signature blocks.
 """
 
 from __future__ import annotations
@@ -1040,26 +1040,6 @@ def hash_token(tok: str) -> int:
     for b in tok.encode("utf-8"):
         h = ((h ^ b) * _FNV_PRIME) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-def simhash_candidates(df: DataFrame, id_col: str, text_col: str, prefix_bits: int = 16) -> DataFrame:
-    """SimHash near-dup candidates: bucket on the top ``prefix_bits`` of
-    the signature (one of the 4 rotations of the classic multi-table
-    scheme; tests use exact hamming verification on candidates)."""
-    sig = df.select(F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sim"))
-    bucketed = sig.withColumn(
-        "bucket", F.shiftrightunsigned(F.col("sim"), 64 - prefix_bits)
-    )
-    x = bucketed.alias("x")
-    y = bucketed.alias("y")
-    return (
-        x.join(y, (F.col("x.bucket") == F.col("y.bucket")) & (F.col("x.id") < F.col("y.id")))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.bit_count(F.col("x.sim").bitwiseXOR(F.col("y.sim"))).alias("hamming"),
-        )
-    )
 
 
 def simhash_portable(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:

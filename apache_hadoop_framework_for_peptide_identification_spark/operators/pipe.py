@@ -7,17 +7,20 @@ Reference parity map (citations into /root/reference):
   materialized as ONE headered local file so an external file-oriented
   tool sees a self-contained input; process startup is amortized to
   once per partition, not per record (the reference's core insight —
-  MATLAB MCR boot is expensive; Driver.java:128 map-only design).
+  MATLAB MCR boot is expensive; Driver.java:128 map-only design). The
+  spool (R3) joins each Arrow batch into lines with Arrow kernels; the
+  plan casts every column to text first, so no row passes through Python.
 - run_chain == command templating + sequential multi-stage fork
   (ExecutorMapper.java:174-208): %INPUT_FILE%/%OUTPUT_FILE%/
   %TMP_FILE_N% placeholders, temp files memoized per N so stages share
   intermediates (ExecutorMapper.java:197-203), env injection
   (MCR_CACHE_ROOT, ExecutorMapper.java:174-177), non-zero exit fails
   the task => Spark retries the attempt (ExecutorMapper.java:267-268).
-- collect_outputs == the side-file sink (ExecutorMapper.java:210-226),
-  except rows are returned THROUGH the engine (mapInPandas yield) so
-  Spark's task-commit protocol makes retries/speculation safe — the
-  reference's copy-to-HDFS races on attempt collisions (§2A notes).
+- collect_outputs (R7) == the side-file sink (ExecutorMapper.java:210-226),
+  except %OUTPUT_FILE% is parsed by Arrow's CSV reader into the declared
+  schema and returned THROUGH the engine (mapInArrow yield) so Spark's
+  task-commit protocol makes retries/speculation safe — the reference's
+  copy-to-HDFS races on attempt collisions (§2A notes).
 
 Conscious fixes over the reference (not ported):
 - argv lists via subprocess, never naive whitespace split
@@ -27,12 +30,13 @@ Conscious fixes over the reference (not ported):
 - literal placeholder substitution, not regex replaceAll
   (ExecutorMapper.java:191-192 corrupts on '$' or '\\' in values).
 
-Scale: zero shuffle — a narrow mapInPandas per partition, exactly the
+Scale: zero shuffle — a narrow mapInArrow per partition, exactly the
 reference's map-only topology (Driver.java:128 setNumReduceTasks(0)).
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import shlex
 import subprocess
@@ -40,9 +44,15 @@ import tempfile
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, field
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyarrow import csv as pacsv
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 INPUT_FILE = "%INPUT_FILE%"
 OUTPUT_FILE = "%OUTPUT_FILE%"
@@ -83,46 +93,22 @@ def _tmp_path(memo: dict[str, str], placeholder: str, workdir: str) -> None:
         memo[placeholder] = path
 
 
-def _parse_fields(schema: str) -> list[tuple[str, str]]:
-    """Split a DDL schema string into (name, type) pairs, respecting
-    both parenthesized types like decimal(10,2) and angle-bracketed
-    complex types like map<string,int> / array<struct<x:int,y:int>>."""
-    fields: list[str] = []
-    depth, cur = 0, ""
-    for ch in schema:
-        if ch == "," and depth == 0:
-            fields.append(cur)
-            cur = ""
-        else:
-            depth += ch in "(<"
-            depth -= ch in ")>"
-            cur += ch
-    fields.append(cur)
-    out = []
-    for f in fields:
-        parts = f.strip().split(None, 1)
-        out.append((parts[0], parts[1].lower() if len(parts) > 1 else "string"))
-    return out
+def _any_case(*words: str) -> list[str]:
+    """Every letter-case spelling of ``words``; Arrow matches booleans exactly."""
+    return ["".join(p) for w in words for p in itertools.product(*({c.lower(), c.upper()} for c in w))]
 
 
-def _coerce_to_schema(out: pd.DataFrame, fields: list[tuple[str, str]]) -> pd.DataFrame:
-    """Coerce the tool's text output to the DECLARED schema — external
-    tools emit text; the declared contract, not pandas inference,
-    decides the types (else an int-looking string column breaks the
-    Arrow boundary)."""
-    for name, typ in fields:
-        s = out[name]
-        if typ in ("int", "integer", "smallint", "tinyint", "bigint", "long"):
-            out[name] = pd.to_numeric(s.replace("", None)).astype("Int64")
-        elif typ in ("float", "double", "real") or typ.startswith("decimal"):
-            out[name] = pd.to_numeric(s.replace("", None)).astype("float64")
-        elif typ == "boolean":
-            out[name] = s.str.lower().map(
-                {"true": True, "false": False, "1": True, "0": False}
-            ).astype("boolean")
-        elif typ in ("timestamp", "date"):
-            out[name] = pd.to_datetime(s.replace("", None))
-    return out
+def _write_lines(f, batch: pa.RecordBatch, sep: str) -> None:
+    """Write one ``sep``-joined line per row of an all-string batch, null as ""."""
+    typ = batch.schema.field(0).type  # string or large_string, as Spark ships it
+    fields = pc.binary_join_element_wise(
+        *batch.columns, pa.scalar(sep, typ), null_handling="replace", null_replacement=""
+    )
+    lines = pc.binary_join_element_wise(fields, pa.scalar("", typ), pa.scalar("\n", typ))
+    _, offsets, data = lines.buffers()
+    offsets = np.frombuffer(offsets, np.int64 if pa.types.is_large_string(typ) else np.int32)
+    start, end = offsets[lines.offset], offsets[lines.offset + len(lines)]
+    f.write(memoryview(data)[start:end])
 
 
 def run_chain(
@@ -140,22 +126,37 @@ def run_chain(
     stages = [list(s) for s in spec.stages]
     extra_env = dict(spec.env)
     add_header = spec.header
+    schema = StructType.fromDDL(output_schema)
+    large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true"
+    arrow_schema = to_arrow_schema(schema, prefers_large_types=large)
+    # Output text is parsed into the DECLARED types: an empty field is
+    # null, except in string columns where it stays "".
+    read_opts = pacsv.ReadOptions(column_names=arrow_schema.names)
+    parse_opts = pacsv.ParseOptions(delimiter=sep)
+    convert_opts = pacsv.ConvertOptions(
+        column_types=arrow_schema,
+        null_values=[""],
+        strings_can_be_null=False,
+        true_values=_any_case("true", "1"),
+        false_values=_any_case("false", "0"),
+    )
+    # Staged text is Spark's CAST AS STRING (a no-op on string columns).
+    staged = df.select(
+        *(F.col("`" + c.replace("`", "``") + "`").cast("string").alias(c) for c in cols)
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import re
 
         with tempfile.TemporaryDirectory(prefix="epipe_") as workdir:
             in_path = os.path.join(workdir, "in.txt")
             out_path = os.path.join(workdir, "out.txt")
-            n_rows = 0
             # R2+R3: header then verbatim spool of the whole partition.
-            with open(in_path, "w", encoding="utf-8") as f:
+            with open(in_path, "wb") as f:
                 if add_header:
-                    f.write(sep.join(cols) + "\n")
-                for pdf in batches:
-                    n_rows += len(pdf)
-                    for row in pdf[cols].itertuples(index=False):
-                        f.write(sep.join("" if v is None else str(v) for v in row) + "\n")
+                    f.write((sep.join(cols) + "\n").encode("utf-8"))
+                for batch in batches:
+                    _write_lines(f, batch, sep)
             mapping = {INPUT_FILE: in_path, OUTPUT_FILE: out_path}
             memo: dict[str, str] = {}
             env = dict(os.environ)
@@ -175,19 +176,17 @@ def run_chain(
                         f"stderr: {proc.stderr[-2000:]}"
                     )
             # R7: collect outputs as engine rows (commit-safe).
-            fields = _parse_fields(output_schema)
-            names = [n for n, _ in fields]
             if os.path.exists(out_path) and os.path.getsize(out_path) > 0:
-                out = pd.read_csv(
-                    out_path, sep=sep, header=None, names=names,
-                    dtype=str, keep_default_na=False,
-                )
-                out = _coerce_to_schema(out, fields)
-            else:
-                out = pd.DataFrame({n: pd.Series(dtype="object") for n in names})
-            yield out
+                try:
+                    out = pacsv.read_csv(out_path, read_opts, parse_opts, convert_opts)
+                except pa.ArrowInvalid as e:
+                    raise RuntimeError(
+                        f"E-PIPE output {OUTPUT_FILE} ({out_path}) does not parse as "
+                        f"{output_schema!r}: {e}"
+                    ) from e
+                yield from out.to_batches()
 
-    return df.mapInPandas(fn, output_schema)
+    return staged.mapInArrow(fn, schema)
 
 
 def pipe_lines(df: DataFrame, command: Sequence[str] | str, env: dict[str, str] | None = None) -> DataFrame:

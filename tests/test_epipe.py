@@ -3,8 +3,9 @@ deterministic POSIX scripts in read → write shape — verifying header
 presence, %TMP_FILE_N% memoization (ExecutorMapper.java:197-203
 semantics), env injection (MCR_CACHE_ROOT analog,
 ExecutorMapper.java:174-177), non-zero-exit task failure
-(ExecutorMapper.java:267-268), declared-schema output coercion, and
-partition-count invariance of the merged result.
+(ExecutorMapper.java:267-268), the staged bytes, the declared-schema
+parse-back contract, and partition-count invariance of the merged
+result.
 """
 
 from __future__ import annotations
@@ -19,8 +20,6 @@ import pytest
 
 from apache_hadoop_framework_for_peptide_identification_spark.operators.pipe import (
     ChainSpec,
-    _coerce_to_schema,
-    _parse_fields,
     run_chain,
 )
 from apache_hadoop_framework_for_peptide_identification_spark.plans import spec as spec_mod
@@ -114,24 +113,6 @@ def test_missing_env_fails(spark, docs_df, cranker_bin):
         run_chain(docs_df, chain, "doc_id bigint").collect()
 
 
-def test_parse_fields_nested_types():
-    assert _parse_fields("a bigint, b decimal(10,2), c string") == [
-        ("a", "bigint"),
-        ("b", "decimal(10,2)"),
-        ("c", "string"),
-    ]
-
-
-def test_parse_fields_angle_bracket_types():
-    # ADVICE round 1: parameterized complex types must not split at
-    # their INNER commas.
-    assert _parse_fields("m map<string,int>, a array<struct<x:int,y:int>>, z string") == [
-        ("m", "map<string,int>"),
-        ("a", "array<struct<x:int,y:int>>"),
-        ("z", "string"),
-    ]
-
-
 def test_pipe_lines_spaced_argv(spark):
     """A list argv token containing spaces must survive pipe_lines
     (ADVICE round 1: RDD.pipe re-tokenizes with shlex.split, so tokens
@@ -145,14 +126,130 @@ def test_pipe_lines_spaced_argv(spark):
     assert sorted(r["value"] for r in out) == ["foo bar"]
 
 
-def test_coerce_to_schema_types():
-    import pandas as pd
+@pytest.mark.parametrize("large_var_types", ["false", "true"])
+def test_staged_bytes(spark, tmp_path, large_var_types):
+    """%INPUT_FILE% holds the header, then each row's values joined with
+    ``sep``, one line per row ending in a newline: a null is an empty
+    field, quotes and non-ASCII text pass through verbatim. Arrow ships
+    strings with 32- or 64-bit offsets; both stage the same bytes."""
+    staged = tmp_path / "staged.txt"
+    df = spark.createDataFrame(
+        [(1, 'say "hi"'), (2, None), (3, "naïve café")], "id bigint, body string"
+    ).coalesce(1)
+    chain = ChainSpec(stages=[["cp", "%INPUT_FILE%", str(staged)]], sep="|")
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(key, large_var_types)
+    try:
+        assert run_chain(df, chain, "id bigint").collect() == []
+    finally:
+        spark.conf.unset(key)
+    assert staged.read_bytes() == 'id|body\n1|say "hi"\n2|\n3|naïve café\n'.encode()
 
-    df = pd.DataFrame({"a": ["1", ""], "b": ["true", "false"], "c": ["x", "y"]})
-    out = _coerce_to_schema(df, [("a", "bigint"), ("b", "boolean"), ("c", "string")])
-    assert str(out.a.dtype) == "Int64" and out.a.isna().iloc[1]
-    assert list(out.b) == [True, False]
-    assert list(out.c) == ["x", "y"]
+
+def test_parquet_nullable_bigint_stages_as_integer_text(spark, tmp_path):
+    """A nullable bigint stages as ``5`` and an empty field, never as
+    the float text ``5.0`` and ``nan``."""
+    in_dir, staged = str(tmp_path / "in"), tmp_path / "staged.txt"
+    spark.createDataFrame([(1, 5), (2, None)], "id bigint, n bigint").coalesce(1).write.parquet(
+        in_dir
+    )
+    spec = {
+        "algorithms": [
+            {
+                "name": "CP",
+                "executables": [{"command": f"cp %INPUT_FILE% {staged}"}],
+                "in_dir": in_dir,
+                "out_dir": str(tmp_path / "out"),
+                "output_schema": "id bigint",
+                "input_format": "parquet",
+            }
+        ],
+    }
+    spec_mod.run_algorithm(spark, spec, "CP", write=False).collect()
+    assert staged.read_bytes() == b"id\tn\n1\t5\n2\t\n"
+
+
+CONTRACT_SCHEMA = "n bigint, x double, ok boolean, amt decimal(10,2), s string"
+
+
+def _emit(spark, tmp_path, text, schema=CONTRACT_SCHEMA):
+    """run_chain over one partition whose chain writes ``text`` as its
+    %OUTPUT_FILE%."""
+    src = tmp_path / "emitted.txt"
+    src.write_text(text)
+    chain = ChainSpec(stages=[["cp", str(src), "%OUTPUT_FILE%"]])
+    return run_chain(spark.range(1).coalesce(1), chain, schema)
+
+
+def test_parse_back_declared_types(spark, tmp_path):
+    """The declared schema, not the text, decides the types: an empty
+    field is null in a typed column and "" in a string column; booleans
+    read true/false/1/0 in any case."""
+    from decimal import Decimal
+
+    from pyspark.sql.types import StructType
+
+    out = _emit(
+        spark,
+        tmp_path,
+        "7\t2.5\ttrue\t12.34\tx\n"
+        "\t\t\t\t\n"
+        "-3\t-1e3\tFALSE\t0.5\tz y\n"
+        "4\t0\t1\t1\t1\n"
+        "5\t1\t0\t-2\ttRuE\n",
+    )
+    assert out.schema == StructType.fromDDL(CONTRACT_SCHEMA)
+    assert [tuple(r) for r in out.collect()] == [
+        (7, 2.5, True, Decimal("12.34"), "x"),
+        (None, None, None, None, ""),
+        (-3, -1000.0, False, Decimal("0.50"), "z y"),
+        (4, 0.0, True, Decimal("1.00"), "1"),
+        (5, 1.0, False, Decimal("-2.00"), "tRuE"),
+    ]
+
+
+def test_parse_fields_nested_types(spark, tmp_path):
+    """A parameterized type keeps its inner comma: decimal(10,2) is one
+    column, not two."""
+    from decimal import Decimal
+
+    out = _emit(spark, tmp_path, "1\t12.5\tx\n", "a bigint, b decimal(10,2), c string")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("a", "bigint"),
+        ("b", "decimal(10,2)"),
+        ("c", "string"),
+    ]
+    assert [tuple(r) for r in out.collect()] == [(1, Decimal("12.50"), "x")]
+
+
+def test_parse_fields_angle_bracket_types(spark, tmp_path):
+    """Complex types must not split the DDL at their inner commas."""
+    out = _emit(spark, tmp_path, "", "m map<string,int>, a array<struct<x:int,y:int>>, z string")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("m", "map<string,int>"),
+        ("a", "array<struct<x:int,y:int>>"),
+        ("z", "string"),
+    ]
+    assert out.collect() == []
+
+
+def test_coerce_to_schema_types(spark, tmp_path):
+    """An empty bigint field is null; booleans and strings read back as
+    declared."""
+    out = _emit(spark, tmp_path, "1\ttrue\tx\n\tfalse\ty\n", "a bigint, b boolean, c string")
+    assert [tuple(r) for r in out.collect()] == [(1, True, "x"), (None, False, "y")]
+
+
+def test_parse_back_garbage_fails_task(spark, tmp_path):
+    with pytest.raises(Exception, match="E-PIPE output"):
+        _emit(spark, tmp_path, "abc\t1\ttrue\t1\tx\n").collect()
+
+
+def test_parse_back_short_row_fails_naming_output_file(spark, tmp_path):
+    """A row with fewer fields than declared fails the task; it is never
+    padded with nulls."""
+    with pytest.raises(Exception, match=r"%OUTPUT_FILE% \(\S*out\.txt\)"):
+        _emit(spark, tmp_path, "1\t2.5\ttrue\t1\tx\n2\t3.5\n").collect()
 
 
 # --- CLI surface (mirrors mrexecutor <algorithm> <spec> [header],
