@@ -14,6 +14,20 @@ Driver.java:42-46):
   (Driver.java:91-101) — here it declares the staged file's column
   order instead of being prompted interactively.
 
+A ``csv`` in_dir is read with its header line. The driver reads the
+column names from the first non-blank line of the first non-hidden,
+non-empty file in path order (Hadoop ``FileSystem``, so any scheme
+works) and hands Spark an all-string schema with ``enforceSchema=False``;
+the scan tasks then check every file's header against it, so a file
+whose header disagrees fails the job instead of being read under
+another file's column names, and no extra Spark job is spent reading
+the header. Names that differ only in letter case pass the check and
+take the first file's spelling. Spark's own header inference (one
+extra job, no cross-file check) is kept for what the driver-side read
+does not model: a glob or unlistable in_dir, a sub-directory in it, a
+header with a quote character, an empty name or a name repeated
+regardless of case, and a first file with no non-blank line.
+
 Differences by design: commands are shlex-split into argv (the
 reference's Runtime.exec whitespace split breaks on spaced paths,
 ExecutorMapper.java:243), and output lands through the engine's
@@ -28,7 +42,9 @@ import shlex
 import sys
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..operators.pipe import ChainSpec, run_chain
 
@@ -87,6 +103,73 @@ def _chain_spec(algo: Algorithm, global_env: dict[str, str]) -> ChainSpec:
     return ChainSpec(stages=stages, env={**global_env, **algo.env}, sep=algo.sep)
 
 
+_GLOB_CHARS = frozenset("{}[]*?\\")  # SparkHadoopUtil.isGlobPath
+_JAVA_TRIM = "".join(map(chr, range(33)))  # String.trim; Spark skips lines blank after it
+
+
+def _first_line(jvm, fs, path) -> str | None:
+    """First non-blank line of one file, decompressed as Spark reads it."""
+    stream = fs.open(path)
+    try:
+        codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(fs.getConf())
+        codec = codecs.getCodec(path)
+        if codec is not None:
+            stream = codec.createInputStream(stream)  # closing it closes the file
+        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+        line = reader.readLine()
+        if line is not None:
+            line = line.removeprefix("\ufeff")  # Hadoop's line reader drops the BOM
+        while line is not None and not line.strip(_JAVA_TRIM):
+            line = reader.readLine()
+        return line
+    finally:
+        stream.close()
+
+
+def csv_header_schema(spark: SparkSession, in_dir: str, sep: str) -> StructType | None:
+    """All-string schema named by ``in_dir``'s header line, or None when
+    Spark's header inference must decide (see the module docstring)."""
+    if _GLOB_CHARS & set(in_dir):
+        return None
+    try:
+        path = spark._jvm.org.apache.hadoop.fs.Path(in_dir)
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        root = fs.getFileStatus(path)
+        statuses = [root] if root.isFile() else list(fs.listStatus(path))
+        files = {}
+        for st in statuses:
+            name = st.getPath().getName()
+            if st is not root and (name.startswith((".", "_")) or name.endswith("._COPYING_")):
+                continue  # hidden from Spark's file index
+            if not st.isFile():
+                return None  # partition discovery / nested layout
+            if st.getLen() > 0:
+                files[st.getPath().toString()] = st.getPath()
+        line = _first_line(spark._jvm, fs, files[min(files)]) if files else None
+    except (Py4JError, AttributeError):  # unlistable or unreadable, or no JVM: Spark reports it
+        return None
+    if line is None or '"' in line:
+        return None
+    names = line.split(sep)
+    if "" in names or len({n.lower() for n in names}) < len(names):
+        return None
+    return StructType([StructField(n, StringType()) for n in names])
+
+
+def read_input(spark: SparkSession, algo: Algorithm) -> DataFrame:
+    """``in_dir`` as a DataFrame in the algorithm's ``input_format``."""
+    if algo.input_format == "parquet":
+        return spark.read.parquet(algo.in_dir)
+    if algo.input_format == "text":
+        return spark.read.text(algo.in_dir)
+    schema = csv_header_schema(spark, algo.in_dir, algo.sep)
+    if schema is None:
+        return spark.read.csv(algo.in_dir, sep=algo.sep, header=True, inferSchema=False)
+    return spark.read.csv(
+        algo.in_dir, sep=algo.sep, header=True, schema=schema, enforceSchema=False
+    )
+
+
 def run_algorithm(
     spark: SparkSession,
     spec: dict,
@@ -96,12 +179,7 @@ def run_algorithm(
 ) -> DataFrame:
     """Load in_dir → run the algorithm's chain per partition → out_dir."""
     algo = select_algorithm(spec, name)
-    if algo.input_format == "parquet":
-        df = spark.read.parquet(algo.in_dir)
-    elif algo.input_format == "text":
-        df = spark.read.text(algo.in_dir)
-    else:
-        df = spark.read.csv(algo.in_dir, sep=algo.sep, header=True, inferSchema=False)
+    df = read_input(spark, algo)
     if header:
         df = df.select(*header)
     out = run_chain(df, _chain_spec(algo, spec.get("env", {})), algo.output_schema)

@@ -18,6 +18,7 @@ Design notes (100 TB scale):
 
 from __future__ import annotations
 
+import hashlib
 import os
 import pathlib
 import tempfile
@@ -44,6 +45,29 @@ RUNTIME_CONFS: dict[str, str] = {
 _SHIPPED_APPS: set[str] = set()
 
 
+def _package_zip(pkg_dir: pathlib.Path, out_dir: str) -> str:
+    """Zip ``pkg_dir``'s ``.py`` sources into ``out_dir``, named by their hash.
+
+    Identical sources reuse one file across driver processes; changed
+    sources get a new name, so a stale archive is never shipped.
+    """
+    sources = {
+        f"{pkg_dir.name}/{p.relative_to(pkg_dir).as_posix()}": p
+        for p in sorted(pkg_dir.rglob("*.py"))
+    }
+    digest = hashlib.sha256()
+    for arcname, p in sources.items():
+        digest.update(arcname.encode() + b"\0" + p.read_bytes() + b"\0")
+    zpath = os.path.join(out_dir, f"{pkg_dir.name}_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zpath):
+        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".zip.tmp")
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+            for arcname, p in sources.items():
+                z.write(p, arcname=arcname)
+        os.replace(tmp, zpath)  # concurrent drivers never see a partial zip
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
@@ -58,14 +82,7 @@ def _ship_package(spark: SparkSession) -> None:
     if app in _SHIPPED_APPS:
         return
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"{pkg_dir.name}_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                z.write(p, arcname=str(pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)))
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip(pkg_dir, tempfile.gettempdir()))
     _SHIPPED_APPS.add(app)
 
 

@@ -379,3 +379,106 @@ def test_run_algorithm_text_input(spark, tmp_path):
     }
     out = spec_mod.run_algorithm(spark, spec, "txt", write=False).toPandas()
     assert sorted(out.value) == ["AAA", "BB", "C"]
+
+
+# --- csv in_dir header: read on the driver, checked in every file ---
+
+
+def _tsv_dir(root, files):
+    root.mkdir()
+    for name, text in files.items():
+        (root / name).write_text(text, encoding="utf-8")
+    return root
+
+
+def _csv_algo(in_dir):
+    return spec_mod.select_algorithm(
+        {"algorithms": [{"name": "H", "in_dir": str(in_dir), "out_dir": "",
+                         "output_schema": "x string", "input_format": "csv", "sep": "\t"}]},
+        "H",
+    )
+
+
+def _jobs_while(spark, fn):
+    """(fn's result, Spark job ids it ran), via the job-group status tracker."""
+    sc = spark.sparkContext
+    group = f"hdr-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, "csv header")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_DATA_ROWS = "".join(f"{i}\tw{i}\n" for i in range(5))
+HEADER_CASES = {
+    "one_file": {"a.tsv": "doc_id\tbody\n" + _DATA_ROWS},
+    "sixteen_files": {  # laid out like a Spark-written dir: hidden files are not data
+        **{f"part-{i:02d}.tsv": f"doc_id\tbody\n{i}\tw{i}\n{i + 100}\t\n" for i in range(16)},
+        "_SUCCESS": "",
+        ".part-00.tsv.crc": "not a header",
+    },
+    "blank_line_before_header": {"a.tsv": "\n  \ndoc_id\tbody\n" + _DATA_ROWS},
+    "bom_and_crlf": {"a.tsv": "\ufeffdoc_id\tbody\r\n1\tp\r\n2\tq\r\n"},
+    "header_only_file": {"a.tsv": "doc_id\tbody\n", "b.tsv": "doc_id\tbody\n" + _DATA_ROWS,
+                         "c.tsv": "doc_id\tbody\n7\tz\n"},
+}
+FALLBACK_CASES = {
+    "duplicate_names": ({"a.tsv": "id\tID\tbody\n1\t2\tx\n"}, ""),
+    "empty_name": ({"a.tsv": "id\t\tbody\n1\t2\tx\n"}, ""),
+    "glob": ({"a.tsv": "doc_id\tbody\n" + _DATA_ROWS, "b.tsv": "doc_id\tbody\n9\ty\n"}, "/*.tsv"),
+}
+
+
+def _assert_same_frame(got, want):
+    assert got.columns == want.columns
+    rows = [sorted(map(tuple, df.collect()), key=repr) for df in (got, want)]
+    assert rows[0] == rows[1]
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_csv_header_read_on_driver_matches_spark_inference(spark, tmp_path, case):
+    in_dir = _tsv_dir(tmp_path / "in", HEADER_CASES[case])
+    algo = _csv_algo(in_dir)
+    assert spec_mod.csv_header_schema(spark, algo.in_dir, algo.sep) is not None
+    got, jobs = _jobs_while(spark, lambda: spec_mod.read_input(spark, algo))
+    assert jobs == []  # building the reader runs no Spark job
+    _assert_same_frame(got, spark.read.csv(str(in_dir), sep="\t", header=True))
+
+
+@pytest.mark.parametrize("case", sorted(FALLBACK_CASES))
+def test_csv_header_fallback_cases_use_spark_inference(spark, tmp_path, case):
+    files, suffix = FALLBACK_CASES[case]
+    in_dir = str(_tsv_dir(tmp_path / "in", files)) + suffix
+    algo = _csv_algo(in_dir)
+    assert spec_mod.csv_header_schema(spark, algo.in_dir, algo.sep) is None
+    got, jobs = _jobs_while(spark, lambda: spec_mod.read_input(spark, algo))
+    assert jobs  # Spark's header-inference job
+    _assert_same_frame(got, spark.read.csv(in_dir, sep="\t", header=True))
+
+
+def _identity_spec(tmp_path, in_dir, output_schema):
+    body = _script(tmp_path / "body.sh", "awk 'NR>1' \"$1\" > \"$2\"\n")
+    return {"algorithms": [{
+        "name": "ID", "executables": [{"command": f"{body} %INPUT_FILE% %OUTPUT_FILE%"}],
+        "in_dir": str(in_dir), "out_dir": str(tmp_path / "out"),
+        "output_schema": output_schema, "input_format": "csv", "sep": "\t"}]}
+
+
+def test_run_algorithm_rejects_disagreeing_csv_headers(spark, tmp_path):
+    """Files whose headers name the columns in another order must not be
+    read under the first file's names (that silently swaps x and y)."""
+    in_dir = _tsv_dir(tmp_path / "in", {"a.tsv": "x\ty\n1\t2\n", "b.tsv": "y\tx\n3\t4\n"})
+    spec = _identity_spec(tmp_path, in_dir, "x string, y string")
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        spec_mod.run_algorithm(spark, spec, "ID", write=False).collect()
+
+
+def test_run_algorithm_csv_header_case_from_first_file(spark, tmp_path):
+    in_dir = _tsv_dir(tmp_path / "in", {"a.tsv": "Doc\tbody\n1\tp\n", "b.tsv": "doc\tBODY\n2\tq\n"})
+    algo = _csv_algo(in_dir)
+    assert spec_mod.read_input(spark, algo).columns == ["Doc", "body"]
+    spec = _identity_spec(tmp_path, in_dir, "doc bigint, body string")
+    out = spec_mod.run_algorithm(spark, spec, "ID", write=False).collect()
+    assert sorted(map(tuple, out)) == [(1, "p"), (2, "q")]
