@@ -80,7 +80,7 @@ quality-gate-calibration:
 	$(PY) scripts/quality_gate_calibration.py
 
 # The BASELINE.md r19 durability-tax row: wall time of the
-# checkpoint_mode regimes (local / replicated / reliable) on
+# checkpoint regimes (local / replicated / reliable) on
 # dedup_mix_pack (keeper-sized checkpoints) and epoch_shuffle (the
 # corpus-sized one) at sf0.1 — prices the fault envelope SCALE.md
 # documents and tests/test_reliability.py fault-injects.

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .reliability import materialize
+
 
 def tokens(text_col: Column) -> Column:
     return F.split(text_col, " ")
@@ -226,7 +228,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """BM25 top-k document retrieval for a fixed bag of query terms.
 
@@ -234,12 +235,11 @@ def bm25_topk(
     over the scan tokenizes each document and reduces it to the
     per-doc sufficient statistics — ``(id, dl, tf_term0..tf_termK)``,
     a few dozen bytes per document regardless of document length.
-    That narrow frame is lazily materialized (``materialize`` —
-    dedup._materialize_index regimes; storage is per-doc rows, NOT
-    the tokenized corpus) and consumed twice: once by the single-row
-    stats aggregate (N, Σdl, per-term document frequencies — df(t) =
-    Σ[tf(t) > 0], identical to the former array_contains count), once
-    by the scorer. Before r20 the stats pass and the scoring pass
+    That narrow frame is lazily materialized (reliability.materialize;
+    storage is per-doc rows, NOT the tokenized corpus) and consumed
+    twice: once by the single-row stats aggregate (N, Σdl, per-term
+    document frequencies — df(t) = Σ[tf(t) > 0], identical to the
+    former array_contains count), once by the scorer. Before r20 the stats pass and the scoring pass
     each re-tokenized the full corpus (two text scans — guide §1.2);
     now text bytes are read and split exactly once, and what the
     second consumer re-reads is the checkpointed per-doc row. Scoring
@@ -258,8 +258,6 @@ def bm25_topk(
     expression), never its value or the float op order — outputs are
     bit-identical (oracle hash re-proven).
     """
-    from .dedup import _materialize_index
-
     t = tokens(F.col(text_col))
 
     def _tf(term: str):
@@ -273,7 +271,7 @@ def bm25_topk(
         F.size(t).cast("long").alias("__dl"),
         *[_tf(term).alias(f"__tf_{i}") for i, term in enumerate(terms)],
     )
-    narrow = _materialize_index(narrow, materialize)
+    narrow = materialize(narrow, eager=False)
 
     stats = narrow.agg(
         F.count("*").alias("__n"),

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
+from .reliability import materialize
+
 
 def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     """Keep one representative (min id) per distinct value of ``cols``.
@@ -148,53 +150,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _materialize_index(df: DataFrame, materialize: str) -> DataFrame:
-    """Materialization policy for a multiply-consumed posting index
-    (ADVICE r8 item 4 — the knob, plus the trade-offs in one place):
-
-    - ``"local_checkpoint"`` (default): lazy ``localCheckpoint`` —
-      fastest (blocks live on executors, lineage truncated), but the
-      blocks are pinned until the session ends (no unpersist handle)
-      and NOT fault-tolerant: losing an executor fails the job instead
-      of recomputing. Right for batch jobs that end soon after.
-    - ``"persist"``: ``MEMORY_AND_DISK`` cache — recomputable on
-      executor loss, and reclaimable (``df.unpersist()`` on the
-      returned frame, or ``spark.catalog.clearCache()``). Right for
-      long-lived sessions calling the operator repeatedly.
-    - ``"none"``: no materialization — each consumer branch re-scans
-      and re-shingles from source (measured ~1.4× wall at sf0.1, 12
-      FileScans for the 4-branch containment plan). Right when the
-      upstream is itself cached or trivially cheap.
-    - ``"reliable_checkpoint"`` (r19 — the fault-envelope regime,
-      operators/reliability.py): DFS checkpoint via
-      ``sc.setCheckpointDir`` — survives ANY executor loss (the
-      ``local_checkpoint`` mode is job-fatal on loss; ``persist``
-      survives by lineage recompute but keeps the full plan). Right
-      for multi-hour index builds whose recompute is itself
-      expensive. Unlike the other modes this one is EAGER: the index
-      computes and checkpoint-writes inside this call, before any
-      consumer action (reliable checkpoints are never lazy — the
-      lazy variants were measured to either recompute the subtree or
-      leak a cache entry; reliability.materialize's docstring).
-    """
-    if materialize == "local_checkpoint":
-        return df.localCheckpoint(eager=False)
-    if materialize == "persist":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    if materialize == "none":
-        return df
-    if materialize == "reliable_checkpoint":
-        from .reliability import materialize as _mat
-
-        return _mat(df, "reliable")
-    raise ValueError(
-        f"materialize must be 'local_checkpoint', 'persist', 'none', or "
-        f"'reliable_checkpoint'; got {materialize!r}"
-    )
-
-
 def _packed_corpus_order(id_c, pos_c):
     """(id, pos) corpus order as ONE hash-aggregatable value (r11).
 
@@ -223,7 +178,6 @@ def prefix_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.6,
-    materialize: str = "local_checkpoint",
     hash_postings: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard-≥-threshold pairs via prefix filtering (SSJoin /
@@ -300,9 +254,8 @@ def prefix_jaccard_pairs(
     # The posting index feeds the prefix join AND both verify sides;
     # without materialization each branch re-scans and re-shingles the
     # corpus from source. Storage ∝ postings — the operator's working
-    # set; measured 0.7× wall at sf0.1. Policy/caveats: see
-    # _materialize_index (ADVICE r8 item 4).
-    ordered = _materialize_index(ordered, materialize)
+    # set; measured 0.7× wall at sf0.1.
+    ordered = materialize(ordered, eager=False)
     prefix = ordered.filter(
         F.col("__pos") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
     ).select("id", "sh", "__n")
@@ -348,7 +301,6 @@ def containment_prefix_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.9,
-    materialize: str = "local_checkpoint",
     hash_postings: bool = True,
 ) -> DataFrame:
     """EXACT containment-≥-threshold ORDERED pairs via the ASYMMETRIC
@@ -403,9 +355,8 @@ def containment_prefix_pairs(
     # and re-shingles the corpus from source (12 FileScans observed).
     # Materialized once — storage ∝ postings, which are this
     # operator's working set anyway; measured 0.68× wall at sf0.1
-    # (BASELINE.md r8 notes). Policy/caveats: see _materialize_index
-    # (ADVICE r8 item 4).
-    ordered = _materialize_index(ordered, materialize)
+    # (BASELINE.md r8 notes).
+    ordered = materialize(ordered, eager=False)
     prefix = ordered.filter(
         F.col("__pos") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
     ).select(F.col("id").alias("id_a"), "sh", F.col("__n").alias("n_a"))
@@ -508,7 +459,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     max_bucket: int | None = None,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
@@ -531,10 +481,8 @@ def minhash_lsh_candidates(
     # one side the signature subtree above the groupBy exchange (the
     # 64-way min merge + band explode) executes once per consumer —
     # measured 1.92 → 1.55 s at sf0.1 (q42). 20 bytes/row × bands,
-    # the operator's working set; policy + regimes (including the
-    # fault-tolerant 'reliable_checkpoint') via _materialize_index
-    # (ADVICE r8 item 4 / r19 knob-consistency item).
-    banded = _materialize_index(banded, materialize)
+    # the operator's working set.
+    banded = materialize(banded, eager=False)
     if max_bucket is not None:
         hot = (
             banded.groupBy("band", "bucket")
@@ -721,7 +669,6 @@ def minhash_jaccard_pairs(
     shingle_n: int = 3,
     max_bucket: int | None = None,
     hash_postings: bool = True,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """The full MinHash-LSH dedup PIPELINE: banded candidates (see
     minhash_lsh_candidates) followed by an exact n-gram Jaccard verify
@@ -751,17 +698,16 @@ def minhash_jaccard_pairs(
     wins on high-entropy real text, and bounds exchange width either
     way)."""
     cand = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket, materialize
+        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket
     )
     sh = exploded_shingles(df, id_col, text_col, shingle_n)
     if hash_postings:
         sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
     # Materialized once: the verify consumes `sh` three times (the
     # per-doc sizes and both posting sides), each consumer otherwise
-    # re-running the corpus shingle explode + md5 (r19; the
-    # _materialize_index policy + regimes, ADVICE r8 item 4 — 16-byte
-    # posting rows, the verify's working set).
-    sh = _materialize_index(sh, materialize)
+    # re-running the corpus shingle explode + md5 (16-byte posting
+    # rows, the verify's working set).
+    sh = materialize(sh, eager=False)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
     sb = sh.select(F.col("id").alias("__idb"), F.col("sh").alias("s_b"))
@@ -1161,7 +1107,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Connected components over candidate-pair edges → (id, cluster_id)
     with cluster_id = min node id in the component. This is the step
@@ -1172,7 +1117,7 @@ def connected_components(
     (GraphFrames-free): each round every node takes the min label among
     itself and its neighbors; converges in O(component diameter)
     rounds. The driver loop iterates over PLANS, not data — per round
-    one shuffle keyed on node id, and localCheckpoint() truncates the
+    one shuffle keyed on node id, and materialize() truncates the
     lineage so plan size stays constant. Near-dup graphs have tiny
     diameters (dup clusters are cliques-ish), so rounds ~ 2-3 in
     practice; for adversarial long-chain graphs at 100 TB switch to
@@ -1180,34 +1125,29 @@ def connected_components(
     large-star/small-star variant made callable: O(log n) rounds,
     same join shape, pytest-pinned label-equal).
 
-    ``checkpoint_mode`` (r19): the per-round label truncation is
-    unrecoverable under the default ``"local"`` regime on executor
-    loss (the whole propagation restarts); long cluster runs should
-    pass ``"replicated"`` or ``"reliable"`` — labels are (long, long)
-    pairs, so durability is cheap. Regimes: operators/reliability.py
-    + SCALE.md; label parity across modes pinned by
-    tests/test_reliability.py.
+    The per-round label truncation is unrecoverable under the default
+    ``"local"`` durability regime on executor loss (the whole
+    propagation restarts); long cluster runs should set
+    ``"replicated"`` or ``"reliable"`` — labels are (long, long) pairs,
+    so durability is cheap. Regimes: operators/reliability.py.
     """
-    from .reliability import materialize as _mat
-
     sym = edges.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
     sym = sym.union(sym.select(F.col("d").alias("s"), F.col("s").alias("d")))
     nodes = sym.select(F.col("s").alias("id")).distinct()
-    labels = _mat(nodes.select("id", F.col("id").alias("label")), checkpoint_mode)
+    labels = materialize(nodes.select("id", F.col("id").alias("label")))
     for _ in range(max_iter):
         nbr_min = (
             sym.join(labels, sym["d"] == labels["id"])
             .groupBy("s")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = _mat(
+        new_labels = materialize(
             labels.join(nbr_min, labels["id"] == nbr_min["s"], "left").select(
                 "id",
                 F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-            ),
-            checkpoint_mode,
+            )
         )
         changed = (
             new_labels.alias("n")
@@ -1244,7 +1184,6 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 60,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     rounds (r12 — the O(log n)-round variant
@@ -1270,7 +1209,7 @@ def connected_components_star(
 
     Each round is two groupBy-min aggregations + joins keyed on node
     id (map-side combinable, integer pairs only), the driver loop
-    iterates over PLANS with localCheckpoint() truncating lineage
+    iterates over PLANS with materialize() truncating lineage
     (the hash-min form's discipline), and convergence is detected by
     an (edge count, unordered xxhash64 checksum) pair going stable —
     one cheap aggregate per round instead of a set-difference join
@@ -1281,12 +1220,10 @@ def connected_components_star(
     where O(diameter) rounds is the difference between 3 and 300
     shuffles at 100 TB.
 
-    ``checkpoint_mode`` (r19): same fault envelope as the hash-min
-    form — per-round edge-forest truncations are job-fatal on
-    executor loss under ``"local"``; see operators/reliability.py.
+    Same fault envelope as the hash-min form: per-round edge-forest
+    truncations are job-fatal on executor loss under the ``"local"``
+    regime; see operators/reliability.py.
     """
-    from .reliability import materialize as _mat
-
     raw = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
@@ -1295,13 +1232,12 @@ def connected_components_star(
     # as its own singleton cluster, exactly like the hash-min form
     # (r12 review finding: deriving nodes after the filter silently
     # dropped self-loop-only nodes).
-    nodes = _mat(
+    nodes = materialize(
         raw.select(F.col("u").alias("id"))
         .union(raw.select(F.col("v").alias("id")))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
-    e = _mat(raw.filter(F.col("u") != F.col("v")).distinct(), checkpoint_mode)
+    e = materialize(raw.filter(F.col("u") != F.col("v")).distinct())
 
     def _stamp(df: DataFrame) -> tuple[int, int]:
         # bit_xor, not sum: order-independent over the DISTINCT edge
@@ -1341,11 +1277,10 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         part_self = smins.select(F.col("u"), F.col("m").alias("v"))
-        e = _mat(
+        e = materialize(
             part_nbrs.union(part_self)
             .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            checkpoint_mode,
+            .distinct()
         )
         cur = _stamp(e)
         if cur == prev:
@@ -1505,7 +1440,6 @@ def exact_substring_dedup(
     text_col: str,
     chunk_tokens: int = 8,
     min_run: int = 2,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """EXACT SUBSTRING dedup at span granularity (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -1584,8 +1518,7 @@ def exact_substring_dedup(
     # The posting frame feeds the firsts aggregate AND the duplicate-
     # probe join (r19 — the sliding form has materialized since r11;
     # this one re-ran the chunk explode + md5 once per consumer).
-    # Trade-offs documented at _materialize_index (ADVICE r8 item 4).
-    posted = _materialize_index(posted, materialize)
+    posted = materialize(posted, eager=False)
     # Keeper + island + run rules live in _duplicate_runs (shared with
     # the sliding form so the two can never diverge). One row per
     # qualifying run (r12): the removal join carries (start, end)
@@ -1623,7 +1556,6 @@ def sliding_substring_dedup(
     text_col: str,
     window_tokens: int = 8,
     min_span_tokens: int = 16,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """ALIGNMENT-FREE exact substring dedup (r11 — the refinement
     :func:`exact_substring_dedup`'s KNOWN-MISS-MODE note costs as
@@ -1676,10 +1608,9 @@ def sliding_substring_dedup(
     # the duplicate-probe join). At window-per-token volume the
     # re-evaluated explode+md5 subtree costs more than the detection
     # itself — measured 1.8× the stock window form at sf0.1 without
-    # materialization, 0.9× with — so the _materialize_index knob
-    # (trade-offs documented there, ADVICE r8) applies here exactly as
-    # in prefix_jaccard_pairs.
-    posted = _materialize_index(posted, materialize)
+    # materialization, 0.9× with — so it is materialized here exactly
+    # as in prefix_jaccard_pairs.
+    posted = materialize(posted, eager=False)
     # Keeper + island + run rules live in _duplicate_runs (shared with
     # the aligned form so the two can never diverge); a qualifying run
     # of w windows covers w + C - 1 tokens, hence the w_min threshold.

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .reliability import materialize
+
 RANK_SCALE = 1_000_000_000  # 1e9: rank units
 F_SCALE = 1_000_000  # 1e6: edge-factor units
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as a ratio
@@ -44,7 +46,6 @@ def pagerank_int(
     weight: str,
     iters: int = 10,
     checkpoint_every: int = 3,
-    checkpoint_mode: str = "local",
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list, integer-exact.
@@ -63,17 +64,14 @@ def pagerank_int(
     connected-components loop, so the plan stays shallow while the
     driver iterates plans, not data.
 
-    ``checkpoint_mode`` (r19 — the localCheckpoint fault envelope,
-    VERDICT r18): every truncation here — the reused edge-factor
-    table, the node set, and each periodic rank truncation — is
-    unrecoverable under the default ``"local"`` regime if an executor
-    dies after it (no lineage left; the whole multi-iteration job
-    fails). For long iterative runs on a real cluster pass
-    ``"replicated"`` or ``"reliable"`` — the rank table is one
-    (node, long) row per node, tiny next to the edge list, so the
-    durability tax is bounded. Regimes priced in
-    operators/reliability.py + SCALE.md; identical ranks under all
-    modes (tests/test_reliability.py).
+    Every truncation here — the reused edge-factor table, the node
+    set, and each periodic rank truncation — is unrecoverable under
+    the default ``"local"`` durability regime if an executor dies
+    after it (no lineage left; the whole multi-iteration job fails).
+    For long iterative runs on a real cluster set ``"replicated"`` or
+    ``"reliable"`` — the rank table is one (node, long) row per node,
+    tiny next to the edge list, so the durability tax is bounded.
+    Regimes: operators/reliability.py.
 
     ``broadcast_ranks`` (r19): hint the per-iteration rank side as a
     broadcast. The checkpointed rank frame carries NO size statistics
@@ -92,21 +90,14 @@ def pagerank_int(
     Returns (node, rank_int, rank) — rank = rank_int/1e9 exact (both
     fit double's 2^53 integer window for any graph this scaling admits).
     """
-    from .reliability import materialize as _mat
-
     # Lazy-materialized: `e` feeds BOTH the out-weight aggregate and
     # the factor join below; without it the caller's edge build (an
     # Arrow bigram pass in q106) executes twice before fe's eager
-    # checkpoint ever lands. Routed through the durability knob like
-    # every other truncation in this function (ADVICE r19: a hardcoded
-    # localCheckpoint here re-opened the exact fault envelope the knob
-    # closed — under "reliable" an executor loss during the fe/nodes
-    # build must stay recoverable).
-    e = _mat(
+    # checkpoint ever lands.
+    e = materialize(
         edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
         ),
-        checkpoint_mode,
         eager=False,
     )
     outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
@@ -115,49 +106,11 @@ def pagerank_int(
         "dst",
         F.expr(f"CAST(w * {F_SCALE} AS BIGINT) div outw").alias("f"),
     )
-    if not broadcast_ranks:
-        # Non-broadcast regime (r20, VERDICT r19 item 2): hash-partition
-        # the edge-factor table by ``src`` ONCE, sort it within
-        # partitions, and PERSIST it — not checkpoint it. A checkpoint
-        # leaf (LogicalRDD) reports UnknownPartitioning in this Spark
-        # build (measured r20), so the r19 form re-shuffled the edge
-        # list inside the loop (canonical-plan exchange reuse recovered
-        # the middle iterations, but the first and last iterations'
-        # edge sides differ by a pushed isnotnull filter, and every
-        # rank truncation resets reuse — measured 2 edge shuffles per
-        # checkpoint segment). An InMemoryRelation DOES preserve the
-        # cached plan's outputPartitioning and outputOrdering, so every
-        # iteration's sort-merge join sees an edge side that already
-        # satisfies both its distribution and its ordering requirement:
-        # the loop shuffles and sorts ONLY the (node, long) rank table.
-        # One explicit-N shuffle at cache fill replaces `iters` of them;
-        # N is the cluster's defaultParallelism (scale-adaptive, not a
-        # local[32] constant). The usual persist objection
-        # (reliability.materialize: a plan-keyed CacheManager entry can
-        # be substituted into later identical plans) cannot bite here —
-        # fe's lineage contains this call's unique checkpoint RDD (`e`),
-        # so no other query's plan can equal it; the entry does live
-        # until the session ends or the caller clearCache()s, the same
-        # session-bound lifetime every checkpointed frame already has.
-        # Durability under checkpoint_mode='reliable' is INHERITED, not
-        # lost: cached partitions keep their lineage, which roots at
-        # `e`'s DFS blocks — an executor loss recomputes the lost cache
-        # partitions from the DFS instead of failing the job.
-        from pyspark import StorageLevel
-
-        p = edges.sparkSession.sparkContext.defaultParallelism
-        fe = (
-            fe_cols.repartition(p, "src")
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
-        fe = _mat(fe_cols, checkpoint_mode)
-    nodes = _mat(
+    fe = materialize(fe_cols)
+    nodes = materialize(
         fe.select(F.col("src").alias("node"))
         .unionByName(fe.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
     base = round(0.15 * RANK_SCALE)
 
@@ -197,7 +150,7 @@ def pagerank_int(
             # eager=False applies to local/replicated only; reliable
             # mode materializes HERE, mid-loop (never lazy — see
             # reliability.materialize)
-            ranks = _mat(ranks, checkpoint_mode, eager=False)
+            ranks = materialize(ranks, eager=False)
     return ranks.select(
         "node",
         F.col("pr").alias("rank_int"),
@@ -247,17 +200,10 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Exact triangle count over the UNDIRECTED simple graph induced by
     ``edges`` (direction and multiplicity dropped, self-loops removed)
     → one row (n_nodes, n_edges, n_triangles).
-
-    ``checkpoint_mode`` (r20, ADVICE r19): the two working-set
-    truncations below (``und``, ``oriented``) route through
-    reliability.materialize — same regimes and fault envelope as
-    pagerank_int. Default ``"local"`` keeps the bench plan identical
-    to the hardcoded r19 form.
 
     Degree-oriented enumeration (the standard distributed algorithm):
     every undirected edge is directed from its lower-(degree, node)
@@ -271,9 +217,7 @@ def triangle_count(
     Two self-equi-joins on node keys; shuffle carries (node, node,
     key) triples, never adjacency lists.
     """
-    from .reliability import materialize as _mat
-
-    und = _mat(
+    und = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -288,7 +232,6 @@ def triangle_count(
         # (19 scans / 81 exchanges, 12 reused). Lazy under
         # local/replicated: no extra job; storage is one (a, b) pair
         # per distinct edge — the operator's working set.
-        checkpoint_mode,
         eager=False,
     )
     deg = (
@@ -301,7 +244,7 @@ def triangle_count(
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
     ka = F.struct(F.col("deg_a").alias("d"), F.col("a").alias("n"))
     kb = F.struct(F.col("deg_b").alias("d"), F.col("b").alias("n"))
-    oriented = _mat(
+    oriented = materialize(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -311,7 +254,6 @@ def triangle_count(
         ),
         # Same rationale: 3 consumers (both wedge sides + the closing
         # join) would otherwise each re-run the two degree joins.
-        checkpoint_mode,
         eager=False,
     )
     o1 = oriented.select("u", F.col("v").alias("v1"), F.col("kv").alias("k1"))

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .reliability import materialize
+
 # --------------------------------------------------------------- quality
 
 def _toks(text_col: Column) -> Column:
@@ -547,7 +549,6 @@ def global_sort_rank(
     df: DataFrame,
     key_col: str,
     n_partitions: int | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Distributed global 1-based rank by ``key_col`` — WITHOUT the
     single-partition collapse of a bare ``Window.orderBy`` (Spark
@@ -566,7 +567,7 @@ def global_sort_rank(
     rank assignment partitioner-dependent); use a unique tiebreak
     column in the key when in doubt.
 
-    The partitioned frame is localCheckpoint'd before fanning into the
+    The partitioned frame is materialized before fanning into the
     two consumers (offset aggregation + final rank): without it each
     branch re-executes the range exchange, and AQE / range-boundary
     sampling may materialize DIFFERENT partitionings per branch, so
@@ -575,28 +576,23 @@ def global_sort_rank(
     the projected columns — project narrow before ranking and join the
     result back by id if the full row is needed.
 
-    ``checkpoint_mode`` (r19 — the localCheckpoint fault envelope,
-    operators/reliability.py): unlike the keeper-sized sites, THIS
-    checkpoint holds the whole projected corpus, so under the default
-    ``"local"`` regime an executor loss during an hours-long ranked
-    pass (epoch_shuffle over 100 TB) is job-fatal with the full
-    range-exchange bill to re-pay. ``"replicated"`` doubles the
-    residency of the projected bytes; ``"reliable"`` writes them
-    through the DFS once AND materializes eagerly inside this call
-    (reliable checkpoints are never lazy — reliability.materialize;
-    the local/replicated regimes keep the lazy construction below) —
-    both priced in SCALE.md. All three modes return identical rows
-    (tests/test_reliability.py).
+    Durability (operators/reliability.py): unlike the keeper-sized
+    sites, THIS checkpoint holds the whole projected corpus, so under
+    the default ``"local"`` regime an executor loss during an
+    hours-long ranked pass (epoch_shuffle over 100 TB) is job-fatal
+    with the full range-exchange bill to re-pay. ``"replicated"``
+    doubles the residency of the projected bytes; ``"reliable"``
+    writes them through the DFS once AND materializes eagerly inside
+    this call (reliable checkpoints are never lazy; the
+    local/replicated regimes keep the lazy construction below) — both
+    priced in SCALE.md.
     """
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from .reliability import materialize as _mat
-
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parts = _mat(
+    parts = materialize(
         df.repartitionByRange(n, key_col).sortWithinPartitions(key_col),
-        checkpoint_mode,
         eager=False,
     )
 
@@ -646,22 +642,17 @@ def global_sort_rank(
     )
 
 
-def epoch_shuffle(
-    df: DataFrame, id_col: str, epoch: int, checkpoint_mode: str = "local"
-) -> DataFrame:
+def epoch_shuffle(df: DataFrame, id_col: str, epoch: int) -> DataFrame:
     """Deterministic epoch-reproducible global shuffle: rank rows by
     md5(epoch:id). Every run, any cluster, any partitioning produces
     the SAME permutation for a given epoch (unlike orderBy(rand)), and
     each epoch is a fresh permutation — the training-data ordering
-    contract. Adds ``pos`` (1-based). ``checkpoint_mode`` passes
-    through to global_sort_rank's corpus-sized checkpoint (its
-    docstring prices the fault envelope — this is the canonical
-    hours-long-100-TB-pass caller)."""
+    contract. Adds ``pos`` (1-based). This is the canonical
+    hours-long-100-TB-pass caller of global_sort_rank's corpus-sized
+    checkpoint (its docstring prices the fault envelope)."""
     key = F.md5(F.concat(F.lit(f"epoch{epoch}:"), F.col(id_col).cast("string")))
-    return global_sort_rank(
-        df.withColumn("__shuffle_key", key), "__shuffle_key",
-        checkpoint_mode=checkpoint_mode,
-    ).drop("__shuffle_key")
+    ranked = global_sort_rank(df.withColumn("__shuffle_key", key), "__shuffle_key")
+    return ranked.drop("__shuffle_key")
 
 
 # --------------------------------------------------------- quantization
@@ -815,7 +806,6 @@ def dedup_mix_pack(
     budget: int = 128,
     max_bucket: int | None = None,
     broadcast_keepers: bool = True,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """The corpus-build DOWNSTREAM as one reusable composition (r17 —
     factored verbatim out of q201 so its batch form and the streaming
@@ -861,20 +851,16 @@ def dedup_mix_pack(
     makes. The text-never-keyed-exchanged pin holds for the default
     mode only.
 
-    ``checkpoint_mode`` (r19 — VERDICT r18 "What's wrong": the
-    localCheckpoint fault envelope): both corpus-sized
-    materializations here — the post-NFC ``keyed`` frame and the
-    ``keep`` keeper set — are lineage truncations, so under the
-    default ``"local"`` regime their blocks live only in executor
-    caches and ANY executor loss after materialization is job-fatal
-    (nothing left to recompute from). On an hours-long 100 TB build
-    pass ``"replicated"`` (2× executor replicas, survives single
-    loss) or ``"reliable"`` (DFS checkpoint via
-    ``sc.setCheckpointDir``, survives any loss — the frames here are
-    the SMALL mid-pipeline survivors, so the DFS tax is bounded).
-    Regime table: operators/reliability.py + SCALE.md; all three
-    modes return identical rows (parity-pinned by
-    tests/test_reliability.py). Block residency (ADVICE r18): the
+    Durability: both corpus-sized materializations here — the
+    post-NFC ``keyed`` frame and the ``keep`` keeper set — are
+    lineage truncations, so under the default ``"local"`` regime their
+    blocks live only in executor caches and ANY executor loss after
+    materialization is job-fatal (nothing left to recompute from). On
+    an hours-long 100 TB build set ``"replicated"`` (2× executor
+    replicas, survives single loss) or ``"reliable"`` (DFS checkpoint,
+    survives any loss — the frames here are the SMALL mid-pipeline
+    survivors, so the DFS tax is bounded). Regime table:
+    operators/reliability.py + SCALE.md. Block residency: the
     ``keyed`` checkpoint is read only until ``keep`` materializes,
     but local-checkpoint blocks have no public PySpark release handle
     — they are freed by the ContextCleaner once the frame is GC'd
@@ -883,7 +869,6 @@ def dedup_mix_pack(
     DFS instead of executor memory."""
     from . import dedup as D
     from . import text as T
-    from .reliability import materialize as _mat
 
     norm = F.trim(
         F.regexp_replace(
@@ -908,10 +893,10 @@ def dedup_mix_pack(
             F.unhex(F.md5(norm)).alias("k_n"),
         )
     )
-    # one pandas-UDF execution (the q195 rule); durability per the knob
-    keyed = _mat(keyed, checkpoint_mode)
+    # one pandas-UDF execution (the q195 rule)
+    keyed = materialize(keyed)
     # materialize once before the minhash fan-out
-    keep = _mat(_keeper_rows(keyed, broadcast_keepers), checkpoint_mode)
+    keep = materialize(_keeper_rows(keyed, broadcast_keepers))
     pairs = D.minhash_jaccard_pairs(
         keep, "__id", "norm", threshold=neardup_threshold,
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,

@@ -1,116 +1,102 @@
-"""Checkpoint durability policy — pricing the localCheckpoint fault
-envelope (r19, VERDICT r18 "What's wrong").
+"""Materialization and checkpoint durability: one policy, one conf.
 
-The engine truncates lineage at ~30 sites (iterative loops, multi-
-consumer fan-outs, pandas-UDF single-execution pins). Every one of
-them used ``localCheckpoint`` unconditionally, which is the FASTEST
-materialization but also the least durable: blocks live ONLY in the
-executors' caching subsystem with NO lineage left to recompute them,
-so on a real cluster **losing one executor after the checkpoint makes
-those partitions unrecoverable and fails the job**. Invisible on
-local[32]; near-certain over an hours-long 100 TB corpus build across
-thousands of executors. This module is the ONE place that trade is
-priced, and :func:`materialize` is the knob the corpus-sized sites
-thread through (dedup_mix_pack, the PageRank/CC iteration loops; see
-SCALE.md "Checkpoint durability" for the full regime table).
+Every batch truncation point in the engine goes through
+:func:`materialize`: iterative loops (PageRank, connected components,
+the sitemap frontier), multi-consumer posting indexes and fan-outs
+(the dedup, similarity and corpus operators, the batch queries), the
+dedup-ladder finalization, and the final sort guard
+(``queries.materialized_sort``). No operator takes a durability
+argument. The regime is a deployment setting — it depends on the
+cluster's failure model, not on the query — read from one session
+conf, :data:`CONF` (``spark.ahfpi.checkpointMode``, default
+``"local"``):
+
+- in the session builder: ``.config("spark.ahfpi.checkpointMode",
+  "reliable")``;
+- on the command line: ``spark-submit --conf
+  spark.ahfpi.checkpointMode=reliable``;
+- at runtime: ``spark.conf.set(CONF, "replicated")`` — read at each
+  call, so it applies to frames built after the set.
+
+The streaming foreachBatch bodies keep their own ``localCheckpoint``:
+a micro-batch is recovered by replay from its ``checkpointLocation``,
+not from a materialized frame.
 
 Three regimes, cost vs. what survives:
 
-- ``"local"`` (default — every fixture/bench path): executor-cache
-  blocks at the session's default storage level, zero extra I/O.
-  Survives NOTHING: any executor loss after materialization is
-  job-fatal (Spark cannot recompute a truncated lineage). Right for
-  short jobs where a rare retry-from-scratch is cheaper than paying
-  durability tax on every run — and for local mode, where "executor
-  loss" means the whole JVM died anyway.
+- ``"local"`` (default): ``localCheckpoint`` — executor-cache blocks
+  at the session's default storage level, zero extra I/O. Survives
+  nothing: an executor lost after materialization fails the job,
+  because Spark cannot recompute a truncated lineage. Right for short
+  jobs, where a rare retry from scratch is cheaper than a durability
+  tax on every run, and for local mode, where executor loss means
+  the whole JVM died anyway.
 - ``"replicated"``: ``localCheckpoint`` at ``MEMORY_AND_DISK_2`` —
-  every block lives on TWO executors (Spark 4's storageLevel
-  parameter). Survives any SINGLE executor loss between replica
-  placements; concurrent/rolling losses can still kill both copies.
-  Costs one extra network copy of the materialized bytes, no DFS
-  round-trip. The middle regime for multi-hour jobs on clusters with
-  uncorrelated failures.
-- ``"reliable"``: ``DataFrame.checkpoint()`` — blocks written to the
-  ``SparkContext.setCheckpointDir`` DFS path. Survives ANY number of
-  executor losses (tasks re-read from DFS). Costs one full write +
-  re-read of the materialized bytes through the DFS. The regime for
-  the 100 TB corpus build itself: the checkpointed frames there are
-  the SMALL mid-pipeline survivors (keeper ids, normalized keeper
-  rows, rank tables — orders of magnitude below the input scan), so
-  the DFS tax is bounded while the job gains restartability at every
-  truncation point.
+  every block lives on two executors. Survives any single executor
+  loss; concurrent losses can still kill both copies. Costs one extra
+  network copy of the materialized bytes, no DFS round-trip.
+- ``"reliable"``: ``DataFrame.checkpoint()`` into the
+  ``spark.checkpoint.dir`` / ``SparkContext.setCheckpointDir`` path.
+  Survives any number of executor losses (tasks re-read from the
+  DFS). Costs one write and re-read of the materialized bytes. The
+  regime for a corpus-sized build: the checkpointed frames are the
+  small mid-pipeline survivors (keeper ids, rank tables, posting
+  indexes), so the tax is bounded while the job gains restartability
+  at every truncation point.
 
-Parity contract: the regimes change WHERE blocks live, never what any
-query returns — pinned by tests/test_reliability.py running
-dedup_mix_pack and pagerank_int under all three regimes against the
-default-mode output. The envelope itself is fault-injection-tested
-there too (purge the materialized blocks: local dies with Spark's
-checkpoint-block-not-found, reliable re-reads from the DFS), and the
-wall-clock tax is measured in BASELINE.md (`make checkpoint-tax`,
-sf0.1: no measurable tax at the keeper-sized sites, 1.33x reliable
-at the one corpus-sized site — proportional to the CHECKPOINTED
-bytes, not the corpus).
+The regimes change where blocks live, never what a query returns:
+tests/test_reliability.py runs every materialization site under all
+three regimes and injects block loss to show what each survives. The
+wall-clock tax is measured by ``make checkpoint-tax`` (BASELINE.md).
 
-Compression: the engine session (session.get_spark) sets
-``spark.checkpoint.compress=true`` — A/B-measured 0.52x checkpoint
-bytes on the corpus-sized ranked frame at flat wall, halving the DFS
-round-trip the reliable regime pays. It is a CORE conf read at
-context start, so an externally built session must set it in ITS
-builder; configure() cannot retrofit it.
+The engine session sets ``spark.checkpoint.compress=true`` (0.52x
+checkpoint bytes at flat wall on the corpus-sized ranked frame). It
+is a core conf read at context start, so an externally built session
+must set it in its own builder.
 
-Housekeeping under ``"reliable"``: checkpoint files stay on the DFS
-until the application exits. A long-lived session running MANY
-finalization builds should set
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so files
-whose frames are GC'd are reaped, or point ``setCheckpointDir`` at a
-per-job path it removes afterwards — otherwise the checkpoint dir
-grows by one materialized frame per build.
+Under ``"reliable"`` checkpoint files stay on the DFS until the
+application exits. A long-lived session running many builds should
+set ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` or point
+the checkpoint dir at a per-job path it removes afterwards.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: The three durability regimes, in cheapest-first order. Public so
-#: tests and measurement scripts iterate THIS tuple instead of
-#: hand-copying it — a fourth regime added here is automatically
-#: parity-tested and priced.
+#: The session conf that selects the durability regime.
+CONF = "spark.ahfpi.checkpointMode"
+
+#: The three durability regimes, cheapest first. Tests and measurement
+#: scripts iterate this tuple, so a regime added here is parity-tested
+#: and priced.
 MODES = ("local", "replicated", "reliable")
 
 
-def materialize(df: DataFrame, mode: str = "local", eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage under the chosen
-    durability regime (module doc). ``"reliable"`` requires a
-    checkpoint directory; failing loudly here beats Spark's late
-    executor-side error after the upstream work already ran.
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` once and truncate its lineage under the
+    session's durability regime (:data:`CONF`, module doc).
 
-    ``"reliable"`` deliberately IGNORES ``eager=False`` and always
-    checkpoints eagerly — both lazy variants were
-    accumulator-measured as strictly worse:
+    ``"reliable"`` needs a checkpoint directory; failing here beats
+    Spark's late executor-side error after the upstream work ran.
 
-    - bare ``checkpoint(eager=False)`` leaves the blocks unpersisted,
-      so the subtree executes TWICE (the first consumer's job, then
-      again for the checkpoint-write job) — forfeiting the
-      materialize-once guarantee every call site exists to provide;
-    - ``persist()`` before the lazy checkpoint restores 1x compute
-      but registers a plan-keyed CacheManager entry that nothing ever
-      unpersists — a session-lifetime memory/disk leak per call, and
-      the cached plan is silently substituted (InMemoryTableScan)
-      into LATER identical plans, serving stale rows if the backing
-      files were rewritten.
+    ``"reliable"`` ignores ``eager=False`` and always checkpoints
+    eagerly, because both lazy variants were measured to be worse:
+
+    - a bare ``checkpoint(eager=False)`` leaves the blocks unpersisted,
+      so the subtree executes twice (the first consumer's job, then
+      the checkpoint-write job);
+    - ``persist()`` before the lazy checkpoint restores 1x compute but
+      registers a plan-keyed CacheManager entry that nothing
+      unpersists: a session-lifetime leak, and the cached plan is
+      substituted into later identical plans, serving stale rows if
+      the backing files were rewritten.
 
     Eager reliable is 1x compute for any number of consumers with no
-    cache residue (verified). What the override costs: (a) the
-    materialization happens at call time instead of first action — a
-    scheduling shift; and (b) each consumer re-reads the checkpoint
-    FILES from the DFS rather than an executor cache — that re-read
-    is the durable regime's defining behavior (it is what survives
-    executor loss; SCALE.md's table row) and is included in the
-    measured 1.33x corpus-sized tax. A caller fanning a reliable
-    frame into MANY consumers who wants cache-speed reads on top of
-    durability should ``.persist()`` the RETURNED frame and
-    ``.unpersist()`` it when done — caller-owned lifecycle, so
-    nothing leaks."""
+    cache residue. It materializes at call time instead of at the
+    first action, and each consumer re-reads the checkpoint files
+    from the DFS — the re-read is what survives executor loss."""
+    mode = df.sparkSession.conf.get(CONF, "local")
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if mode == "replicated":
@@ -121,12 +107,11 @@ def materialize(df: DataFrame, mode: str = "local", eager: bool = True) -> DataF
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             raise ValueError(
-                "checkpoint_mode='reliable' needs a reliable checkpoint "
-                "directory: call spark.sparkContext.setCheckpointDir(<DFS "
-                "path>) first (an executor-local path silently gives NO "
-                "durability on a real cluster — use HDFS/S3/shared storage)"
+                f"{CONF}=reliable needs a reliable checkpoint directory: set "
+                "spark.checkpoint.dir or call spark.sparkContext."
+                "setCheckpointDir(<DFS path>) first (an executor-local path "
+                "gives no durability on a real cluster — use HDFS/S3/shared "
+                "storage)"
             )
         return df.checkpoint(eager=True)  # docstring: why never lazy
-    raise ValueError(
-        f"checkpoint_mode must be one of {MODES}; got {mode!r}"
-    )
+    raise ValueError(f"{CONF} must be one of {MODES}; got {mode!r}")

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .reliability import materialize
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -281,7 +283,6 @@ def embedding_neardup_lsh(
     n_rows: int | None = None,
     recall_target: float = 0.9,
     sizing_cos: float | None = None,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Embedding near-dup at scale: hyperplane-LSH banding generates
     candidate pairs (equi-join on (band, bucket) — shuffle bounded by
@@ -355,16 +356,10 @@ def embedding_neardup_lsh(
     # plan ran the mapInPandas signature pass once PER CONSUMER (the
     # broadcast side of the candidate join defeats exchange reuse;
     # measured 4 MapInPandas nodes / 14 scans in q67's r19 executed
-    # plan). Lazy localCheckpoint: no extra job, first action
+    # plan). Lazy under local/replicated: no extra job, first action
     # materializes, every branch reads the cached (id, band, bucket)
-    # rows — 20 bytes/row × bands, the operator's working set. The
-    # ``materialize`` knob routes through dedup._materialize_index
-    # (ADVICE r8 item 4 / r19 knob-consistency item) — default
-    # 'local_checkpoint' is the r19 plan verbatim; 'reliable_checkpoint'
-    # buys executor-loss recovery for multi-hour cluster runs.
-    from .dedup import _materialize_index
-
-    banded = _materialize_index(banded, materialize)
+    # rows — 20 bytes/row × bands, the operator's working set.
+    banded = materialize(banded, eager=False)
     if max_bucket is not None:
         hot = (
             banded.groupBy("band", "bucket")

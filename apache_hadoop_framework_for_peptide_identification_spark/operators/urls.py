@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .reliability import materialize
+
 # Exact-name click identifiers scrubbed alongside the utm_* prefix
 # family. Keep in sync with the q179 oracle's regex.
 TRACKING_PARAMS = ("fbclid", "gclid", "msclkid", "yclid", "igshid", "mc_eid", "_ga")
@@ -327,7 +329,6 @@ def sitemap_frontier(
     fetched_url_col: str = "url",
     xml_col: str = "xml",
     max_depth: int = 3,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Bounded-depth sitemap frontier walk (r13 — VERDICT r12 item 4):
     resolve a seed set of sitemap URLs (e.g. :func:`robots_sitemaps`
@@ -354,18 +355,16 @@ def sitemap_frontier(
     frontier (both sitemap-URL-sized — bounded by the spec's 50k
     children per index, never corpus-sized), one parse_sitemap
     projection, and one anti-join for the visited set; frontier and
-    visited are localCheckpointed per level so the lineage stays
+    visited are materialized per level so the lineage stays
     shallow and the per-level isEmpty probe is a bounded action. Page
     entries accumulate as a UNION of per-level frames — at most
     ``max_depth`` branches, each output-proportional.
 
-    ``checkpoint_mode`` (r19): the per-level frontier/visited
-    truncations share the iterative-loop fault envelope priced in
-    operators/reliability.py — job-fatal on executor loss under the
-    default ``"local"``; pass ``"replicated"``/``"reliable"`` for
-    long walks on a real cluster (both frames are URL-sized)."""
-    from .reliability import materialize as _mat
-
+    The per-level frontier/visited truncations share the
+    iterative-loop fault envelope priced in operators/reliability.py —
+    job-fatal on executor loss under the default ``"local"`` regime;
+    set ``"replicated"``/``"reliable"`` for long walks on a real
+    cluster (both frames are URL-sized)."""
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     clash = {"kind", "loc", "lastmod", "changefreq", "priority", "depth"} & {
@@ -374,11 +373,10 @@ def sitemap_frontier(
     }
     if clash:
         raise ValueError(f"fetched column names collide with output: {sorted(clash)}")
-    frontier = _mat(
+    frontier = materialize(
         seeds.select(F.trim(F.col(url_col)).alias(fetched_url_col))
         .filter(F.col(fetched_url_col) != "")
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
     )
     visited = frontier
     pages = None
@@ -405,10 +403,8 @@ def sitemap_frontier(
             .select(F.col("loc").alias(fetched_url_col))
             .distinct()
         )
-        frontier = _mat(
-            children.join(visited, fetched_url_col, "left_anti"), checkpoint_mode
-        )
-        visited = _mat(visited.unionByName(frontier), checkpoint_mode)
+        frontier = materialize(children.join(visited, fetched_url_col, "left_anti"))
+        visited = materialize(visited.unionByName(frontier))
     if pages is None:  # empty seed set: empty frame, same schema
         return fetched.sparkSession.createDataFrame(
             [],

@@ -18,6 +18,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.reliability import materialize
+
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -80,35 +82,29 @@ def materialized_sort(df: DataFrame, *cols) -> DataFrame:
     AQE the sampler re-reads earlier shuffle stages cheaply, but
     every operator between the last exchange and the sort — final
     aggregates, broadcast-join tails, explodes, Python stages —
-    executes TWICE (r19 measurement: q67's post-LSH verify tail paid
-    ~0.7 s of its 3.1 s wall to the sampler; guide §1.2 "don't
-    compute things you throw away"). Lazily localCheckpointing the
-    sort input materializes it once, so the sampler and the sort both
-    read cached partitions — no extra job, and storage is
+    executes TWICE (q67's post-LSH verify tail paid ~0.7 s of its
+    3.1 s wall to the sampler). Lazily materializing the sort input
+    (operators/reliability.materialize, under the session's
+    durability regime) runs it once, so the sampler and the sort both
+    read materialized partitions — no extra job, and storage is
     OUTPUT-proportional (the same rows the caller is about to
     collect/write), so the pattern is scale-safe at 100 TB where the
     double-computed tail would be a full extra pass over the result.
 
-    Batch only: localCheckpoint is illegal on streaming frames.
+    Batch only: checkpointing is illegal on streaming frames.
 
-    Block lifetime (ADVICE r19): each call pins its OUTPUT rows as
-    executor-cache blocks for the session's lifetime — there is no
-    unpersist handle on a checkpointed frame. A long-lived session
-    sweeping many queries (bench.py's ~34, or profile_bench's
-    warm-up + timed + noop triple per query) accumulates one
-    output-sized block set per *built DataFrame*; at sf0.1 that is a
-    few hundred MB total across the whole sweep (outputs are small by
-    construction), but a service-style session should rebuild the
-    SparkSession between sweeps — which bench.py effectively does by
-    being a fresh process per invocation.
-
-    Most query tails apply this pattern IN-CHAIN as
-    ``.localCheckpoint(eager=False)`` immediately before the final
-    ``.orderBy`` (marked ``# materialized_sort, in-chain``) — same
-    semantics, kept inside the existing method chain; this function is
-    the canonical documented form for new call sites.
+    Block lifetime: under the default ``"local"`` regime each call
+    pins its OUTPUT rows as executor-cache blocks until the frame is
+    garbage-collected — there is no unpersist handle on a checkpointed
+    frame. A long-lived session sweeping many queries (bench.py's ~34, or
+    profile_bench's warm-up + timed + noop triple per query)
+    accumulates one output-sized block set per *built DataFrame*; at
+    sf0.1 that is a few hundred MB total across the whole sweep
+    (outputs are small by construction), but a service-style session
+    should rebuild the SparkSession between sweeps — which bench.py
+    effectively does by being a fresh process per invocation.
     """
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    return materialize(df, eager=False).orderBy(*cols)
 
 
 def spark_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.asof import asof_join
-from . import query
+from ..operators.reliability import materialize
+from . import materialized_sort, query
 
 
 def _t(spark, sf_dir, name):
@@ -295,12 +296,11 @@ def q135_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     days = ev.select(F.col("d").alias("win_end")).distinct()
-    return (
+    return materialized_sort(
         windowed.join(days, "win_end")
         .groupBy(F.col("win_end").alias("day"))
-        .agg(F.count_distinct("user_id").alias("wau"))
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("day")
+        .agg(F.count_distinct("user_id").alias("wau")),
+        "day",
     )
 
 
@@ -401,19 +401,19 @@ def q137_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket-size cap plus a support-threshold pre-prune on single-item
     frequencies (the A-priori property: a frequent pair needs both
     parts frequent)."""
-    items = (
-        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-        # Materialized once: both self-join sides consume `items`, and
-        # when the planner broadcasts one side the distinct subtree
-        # (scan + exchange + dedup agg) executes twice — measured
-        # 1.63 → 1.45 s at sf0.1. Storage is the join's own input; at
-        # cluster scale the sort-merge form reuses the exchange
-        # instead, so the checkpoint is belt-and-braces there.
-        .localCheckpoint(eager=False)
+    # Materialized once: both self-join sides consume `items`, and
+    # when the planner broadcasts one side the distinct subtree
+    # (scan + exchange + dedup agg) executes twice — measured
+    # 1.63 → 1.45 s at sf0.1. Storage is the join's own input; at
+    # cluster scale the sort-merge form reuses the exchange
+    # instead, so the checkpoint is belt-and-braces there.
+    items = materialize(
+        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct(),
+        eager=False,
     )
     a = items.alias("a")
     b = items.alias("b")
-    return (
+    return materialized_sort(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -423,9 +423,8 @@ def q137_frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b")
         )
         .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= 2)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy(F.col("support").desc(), "part_a", "part_b")
+        .filter(F.col("support") >= 2),
+        F.col("support").desc(), "part_a", "part_b",
     )
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import corpus as C
-from . import query
+from . import materialized_sort, query
 
 
 def _t(spark, sf_dir, name):
@@ -74,7 +74,7 @@ def q100_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence) must keep its copy. One chunk-keyed shuffle — see
     operators/corpus.py paragraph_dedup for the 100 TB accounting."""
     d = _plant_boiler(_t(spark, sf_dir, "documents"))
-    return C.paragraph_dedup(d, "doc_id", "text", chunk_tokens=_CHUNK).localCheckpoint(eager=False).orderBy("doc_id")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(C.paragraph_dedup(d, "doc_id", "text", chunk_tokens=_CHUNK), "doc_id")
 
 
 @query(
@@ -105,7 +105,7 @@ def q101_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant drops in per operators/corpus.py bigram_lm_score."""
     d = _t(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 2 == 0)
-    return C.bigram_lm_score(d, train, "doc_id", "text").localCheckpoint(eager=False).orderBy("doc_id")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(C.bigram_lm_score(d, train, "doc_id", "text"), "doc_id")
 
 
 _BM25_TERMS = ("table", "stream", "vector")
@@ -259,7 +259,7 @@ def q105_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials; mean is an exact integer-sum division."""
     d = _t(spark, sf_dir, "documents")
     n_tok = F.size(F.split(F.col("text"), " "))
-    return C.equiwidth_histogram(d, n_tok, _HIST_WIDTH).localCheckpoint(eager=False).orderBy("bucket")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(C.equiwidth_histogram(d, n_tok, _HIST_WIDTH), "bucket")
 
 
 @query(

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.pipe import ChainSpec, run_chain
-from . import query
+from . import materialized_sort, query
 from ._scratch import _scratch_dir
 
 # Two-stage chain sharing %TMP_FILE_1% (the argFileMap memoization
@@ -57,7 +57,7 @@ def q50_pipe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     like Driver.java:128) until the final presentation sort."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     out = run_chain(d, TOKEN_CHAIN, "doc_id long, n_tokens long")
-    return out.localCheckpoint(eager=False).orderBy("doc_id")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(out, "doc_id")
 
 
 def _assert_tsv_stageable(df, text_col: str = "text") -> None:
@@ -230,7 +230,7 @@ def q149_pipe_corpus_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     amp = amp.repartition(spark.sparkContext.defaultParallelism)
     out = run_chain(amp, CRANKER3_CHAIN, "doc_id long, n_tokens long, n_chars long")
-    return out.localCheckpoint(eager=False).orderBy("doc_id")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(out, "doc_id")
 
 
 @query(

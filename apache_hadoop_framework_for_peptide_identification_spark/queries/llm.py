@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import dedup, similarity
 from ..operators import text as T
-from . import bench_query, query
+from ..operators.reliability import materialize
+from . import bench_query, materialized_sort, query
 
 
 def _t(spark, sf_dir, name):
@@ -45,11 +46,10 @@ def q40_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one representative per byte-identical text. Scale:
     group on the 128-bit hash → shuffle carries hashes, not documents."""
     d = _t(spark, sf_dir, "documents")
-    return (
+    return materialized_sort(
         d.groupBy(F.md5("text").alias("content_hash"))
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("keeper_doc_id")
+        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies")),
+        "keeper_doc_id",
     )
 
 
@@ -145,10 +145,9 @@ def q107_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _plant_text_twins(
         _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     )
-    return (
-        dedup.prefix_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.6)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("id_a", "id_b")
+    return materialized_sort(
+        dedup.prefix_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.6),
+        "id_a", "id_b",
     )
 
 
@@ -199,10 +198,9 @@ def q121_prefix_jaccard_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     realistic df distribution (max df 12) where plan choice is what's
     measured. Same oracle shape as q107, unbounded corpus."""
     d = _plant_text_twins(_t(spark, sf_dir, "documents"))
-    return (
-        dedup.prefix_jaccard_pairs(d, "doc_id", "text", n=4, threshold=0.6)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("id_a", "id_b")
+    return materialized_sort(
+        dedup.prefix_jaccard_pairs(d, "doc_id", "text", n=4, threshold=0.6),
+        "id_a", "id_b",
     )
 
 
@@ -260,9 +258,12 @@ def q42_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-specific → rows-only driver check; recall vs exact Jaccard is
     asserted in tests/test_dedup.py)."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_candidates(
-        d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=3
-    ).localCheckpoint(eager=False).orderBy("id_a", "id_b")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(
+        dedup.minhash_lsh_candidates(
+            d, "doc_id", "text", num_hashes=64, bands=16, shingle_n=3
+        ),
+        "id_a", "id_b",
+    )
 
 
 @bench_query("q43_dedup_simhash")
@@ -342,9 +343,12 @@ def q44_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     out = similarity.cosine_topk(emb, queries, "vec_id", "embedding", k=5)
-    return out.select(
-        "q_id", "n_id", "cos_sim", F.col("rn").cast("bigint").alias("rn")
-    ).localCheckpoint(eager=False).orderBy("q_id", "rn")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(
+        out.select(
+            "q_id", "n_id", "cos_sim", F.col("rn").cast("bigint").alias("rn")
+        ),
+        "q_id", "rn",
+    )
 
 
 @query(
@@ -882,9 +886,12 @@ def q67_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-verified bounded form of this same pipeline."""
     emb = _t(spark, sf_dir, "embeddings")
     corpus = _plant_embedding_twins(emb)
-    return similarity.embedding_neardup_lsh(
-        corpus, "vec_id", "embedding", threshold=0.9, bits=64, bands=8
-    ).localCheckpoint(eager=False).orderBy("id_a", "id_b")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(
+        similarity.embedding_neardup_lsh(
+            corpus, "vec_id", "embedding", threshold=0.9, bits=64, bands=8
+        ),
+        "id_a", "id_b",
+    )
 
 
 def _plant_embedding_twins(emb: DataFrame) -> DataFrame:
@@ -1348,7 +1355,7 @@ def q140_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the length banding loses no pair and the distances agree
     exactly."""
     d = _t(spark, sf_dir, "part")
-    return dedup.fuzzy_name_pairs(d, "p_name", max_dist=3).localCheckpoint(eager=False).orderBy("name_a", "name_b")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(dedup.fuzzy_name_pairs(d, "p_name", max_dist=3), "name_a", "name_b")
 
 
 @query(
@@ -1595,7 +1602,7 @@ def q195_dedup_ladder_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         )
     )
-    # Materialize the normalized frame ONCE (the q190 localCheckpoint
+    # Materialize the normalized frame ONCE (the q190 checkpoint
     # discipline, and q193's single-execution-lineage rule): the exact
     # tier, the keeper join-back, and the near-dup stage's four posting
     # consumers all branch from here — without the checkpoint each
@@ -1603,33 +1610,37 @@ def q195_dedup_ladder_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 29 ArrowEvalPython nodes in the executed plan; 1 after). At
     # corpus scale this is the persisted-tier handoff — each ladder
     # tier's output is written before the next tier reads it.
-    keyed = nfc.select(
-        "doc_id",
-        F.md5("raw").alias("k_r"),
-        F.md5("nfc").alias("k_u"),
-        norm.alias("norm"),
-        F.md5(norm).alias("k_n"),
-    ).localCheckpoint()
+    keyed = materialize(
+        nfc.select(
+            "doc_id",
+            F.md5("raw").alias("k_r"),
+            F.md5("nfc").alias("k_u"),
+            norm.alias("norm"),
+            F.md5(norm).alias("k_n"),
+        )
+    )
     # keeper window over HASHES only — text stays out of the exchange
     wfull = (
         W.partitionBy("k_n")
         .orderBy("doc_id")
         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     )
-    ann = keyed.select(
-        "doc_id",
-        "k_r",
-        "k_u",
-        "k_n",
-        F.first("doc_id").over(wfull).alias("keeper_id"),
-        F.first("k_r").over(wfull).alias("keeper_kr"),
-        F.first("k_u").over(wfull).alias("keeper_ku"),
-    ).localCheckpoint()
+    ann = materialize(
+        keyed.select(
+            "doc_id",
+            "k_r",
+            "k_u",
+            "k_n",
+            F.first("doc_id").over(wfull).alias("keeper_id"),
+            F.first("k_r").over(wfull).alias("keeper_kr"),
+            F.first("k_u").over(wfull).alias("keeper_ku"),
+        )
+    )
     keeper_ids = ann.filter(F.col("doc_id") == F.col("keeper_id")).select("doc_id")
-    ktext = (
+    # 4 posting consumers inside the verify
+    ktext = materialize(
         keyed.select(F.col("doc_id").alias("kid"), F.col("norm").alias("ntext"))
         .join(F.broadcast(keeper_ids), F.col("kid") == F.col("doc_id"), "left_semi")
-        .localCheckpoint()  # 4 posting consumers inside the verify
     )
     pairs = dedup.minhash_jaccard_pairs(
         ktext, "kid", "ntext", threshold=0.5, num_hashes=64, bands=16, shingle_n=3
@@ -1770,14 +1781,13 @@ def q147_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    return (
+    return materialized_sort(
         inter.join(sa, "id_a")
         .select(
             "id_a", "id_b", (F.col("inter") / F.col("n_a")).alias("containment")
         )
-        .filter(F.col("containment") >= 0.9)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("id_a", "id_b")
+        .filter(F.col("containment") >= 0.9),
+        "id_a", "id_b",
     )
 
 
@@ -1947,13 +1957,13 @@ def q164_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Shuffle 16-byte hashes, never chunk text: the key is computed
     # map-side and the string column is dropped before the join.
-    hashed = chunks.select(
-        "doc_id", "pos", F.unhex(F.md5("chunk")).alias("chunk_h")
     # Materialized once: both self-join sides consume `hashed`, and a
     # broadcast side defeats exchange reuse — without this the chunk
-    # explode + md5 pass runs once per side (r19; the
-    # _materialize_index policy).
-    ).localCheckpoint(eager=False)
+    # explode + md5 pass runs once per side.
+    hashed = materialize(
+        chunks.select("doc_id", "pos", F.unhex(F.md5("chunk")).alias("chunk_h")),
+        eager=False,
+    )
     a, b = hashed.alias("a"), hashed.alias("b")
     pairs = (
         a.join(b, (F.col("a.chunk_h") == F.col("b.chunk_h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1975,12 +1985,11 @@ def q164_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs = islands.groupBy("doc_a", "doc_b", "diag", "island").agg(
         F.count(F.lit(1)).alias("run_len")
     )
-    return (
+    return materialized_sort(
         runs.groupBy("doc_a", "doc_b")
         .agg(F.max("run_len").alias("longest_run"))
-        .filter(F.col("longest_run") >= 2)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("doc_a", "doc_b")
+        .filter(F.col("longest_run") >= 2),
+        "doc_a", "doc_b",
     )
 
 
@@ -2039,10 +2048,9 @@ def q165_containment_prefix_corpus(spark: SparkSession, sf_dir: str) -> DataFram
         F.concat_ws(" ", F.slice(F.split(F.col("text"), " "), 1, 20)).alias("text"),
     )
     corpus = d.select("doc_id", "text").unionByName(crops)
-    return (
-        dedup.containment_prefix_pairs(corpus, "doc_id", "text", n=4, threshold=0.9)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("id_a", "id_b")
+    return materialized_sort(
+        dedup.containment_prefix_pairs(corpus, "doc_id", "text", n=4, threshold=0.9),
+        "id_a", "id_b",
     )
 
 
@@ -2103,8 +2111,9 @@ def q166_fuzzy_title_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("substring(name, 1, length(name) - 2)").alias("name")
     )
     corpus = titles.unionByName(twins)
-    return dedup.fuzzy_name_pairs(corpus, "name", max_dist=3).localCheckpoint(eager=False).orderBy(  # materialized_sort, in-chain (queries/__init__)
-        "name_a", "name_b"
+    return materialized_sort(
+        dedup.fuzzy_name_pairs(corpus, "name", max_dist=3),
+        "name_a", "name_b",
     )
 
 
@@ -2339,10 +2348,9 @@ def q177_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return (
-        dedup.exact_substring_dedup(d, "doc_id", "text", chunk_tokens=8, min_run=2)
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("doc_id")
+    return materialized_sort(
+        dedup.exact_substring_dedup(d, "doc_id", "text", chunk_tokens=8, min_run=2),
+        "doc_id",
     )
 
 
@@ -2444,12 +2452,11 @@ def q182_sliding_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    return (
+    return materialized_sort(
         dedup.sliding_substring_dedup(
             d, "doc_id", "text", window_tokens=8, min_span_tokens=16
-        )
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators import pipeline as P
 from ..operators import urls as _U
-from . import query
+from . import materialized_sort, query
 
 
 # shared since r19 (VERDICT r18 item 5) — one implementation for every
@@ -72,12 +72,15 @@ def q83_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = d.select("doc_id", P.repetition_stats(F.col("text")).alias("s"))
     top_frac = F.col("s")["top_tok_frac"]
     dup_frac = F.col("s")["dup_tri_frac"]
-    return stats.select(
+    return materialized_sort(
+        stats.select(
+            "doc_id",
+            top_frac.alias("top_tok_frac"),
+            dup_frac.alias("dup_tri_frac"),
+            ((top_frac <= 0.125) & (dup_frac <= 0.05)).alias("keep"),
+        ),
         "doc_id",
-        top_frac.alias("top_tok_frac"),
-        dup_frac.alias("dup_tri_frac"),
-        ((top_frac <= 0.125) & (dup_frac <= 0.05)).alias("keep"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # materialized_sort, in-chain (queries/__init__)
+    )
 
 
 _PLANT_PII_SQL = """
@@ -482,9 +485,12 @@ def q87_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = d.select(
         "lang", "doc_id", F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tok")
     )
-    return P.pack_sequences(
-        sized, group_col="lang", order_col="doc_id", size_col="n_tok", budget=_PACK_BUDGET
-    ).localCheckpoint(eager=False).orderBy("lang", "doc_id")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(
+        P.pack_sequences(
+            sized, group_col="lang", order_col="doc_id", size_col="n_tok", budget=_PACK_BUDGET
+        ),
+        "lang", "doc_id",
+    )
 
 
 @query(

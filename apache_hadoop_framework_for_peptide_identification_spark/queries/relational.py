@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.asof import asof_join
 from ..operators.topk import top_k_per_group
-from . import query
+from . import materialized_sort, query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,7 +46,7 @@ def q01_scan_filter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 6-group aggregate exchange — bytes shuffled ~ O(groups), not rows."""
     li = _t(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    return materialized_sort(
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -58,9 +58,8 @@ def q01_scan_filter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg("l_extendedprice").alias("avg_price"),
             F.avg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag", "l_linestatus",
     )
 
 
@@ -117,12 +116,15 @@ def q03_window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_custkey; AQE coalesces post-shuffle partitions. Deterministic
     tie-break on o_orderkey so the oracle agrees row-for-row."""
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-    return top_k_per_group(
-        o,
-        group=["o_custkey"],
-        order=[F.col("o_totalprice").desc(), F.col("o_orderkey")],
-        k=3,
-    ).localCheckpoint(eager=False).orderBy("o_custkey", "rn")  # materialized_sort, in-chain (queries/__init__)
+    return materialized_sort(
+        top_k_per_group(
+            o,
+            group=["o_custkey"],
+            order=[F.col("o_totalprice").desc(), F.col("o_orderkey")],
+            k=3,
+        ),
+        "o_custkey", "rn",
+    )
 
 
 # ---------------------------------------------------------------- B4
@@ -140,12 +142,11 @@ def q04_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch tumbling 1-hour window on events (nanos-ts ingest path).
     F.window buckets are epoch-aligned so window.start == date_trunc."""
     ev = _t(spark, sf_dir, "events")
-    return (
+    return materialized_sort(
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_events", "sum_value")
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("window_start", "user_id")
+        .select(F.col("w.start").alias("window_start"), "user_id", "n_events", "sum_value"),
+        "window_start", "user_id",
     )
 
 
@@ -906,7 +907,7 @@ def q168_skew_adversarial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = salted_join(
         big, dim, on=["skew_key"], salt_cols=["r", "l_orderkey"], buckets=32
     )
-    return (
+    return materialized_sort(
         salted_agg(
             joined,
             keys=["skew_key"],
@@ -919,9 +920,8 @@ def q168_skew_adversarial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             buckets=32,
         )
         .withColumn("sum_qty", F.col("sum_qty").cast("double"))
-        .select("skew_key", "n_li", "sum_qty", "n_orders_mod")
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("skew_key")
+        .select("skew_key", "n_li", "sum_qty", "n_orders_mod"),
+        "skew_key",
     )
 
 
@@ -999,14 +999,13 @@ def q173_hot_key_two_path_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left",
         hot_row_threshold=10_000,
     )
-    return (
+    return materialized_sort(
         joined.groupBy("skew_key")
         .agg(
             F.count(F.lit(1)).alias("n_li"),
             F.sum("qty_d").cast("double").alias("sum_qty"),
             F.max("n_orders_mod").alias("n_orders_mod"),
         )
-        .select("skew_key", "n_li", "sum_qty", "n_orders_mod")
-        .localCheckpoint(eager=False)  # materialized_sort, in-chain (queries/__init__)
-        .orderBy("skew_key")
+        .select("skew_key", "n_li", "sum_qty", "n_orders_mod"),
+        "skew_key",
     )

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Durability-tax A/B for the checkpoint_mode regimes (r19 — prices
-the fault envelope docs/SCALE.md describes with measured numbers).
+"""Durability-tax A/B for the checkpoint regimes — prices the fault
+envelope docs/SCALE.md describes with measured numbers.
 
-Runs two knob-carrying forms at the sf0.1 shape under each regime
-(local / replicated / reliable) and reports wall time and the ratio
+Runs two materializing forms at the sf0.1 shape under each regime
+(local / replicated / reliable, set through the session conf
+``spark.ahfpi.checkpointMode``) and reports wall time and the ratio
 to local:
 
 - ``dedup_mix_pack`` — the corpus-build finalizer; its two
@@ -40,6 +41,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from apache_hadoop_framework_for_peptide_identification_spark.operators.reliability import (  # noqa: E402
+    CONF,
     MODES,
 )
 
@@ -63,7 +65,7 @@ def _docs(spark, sf_dir):
     )
 
 
-def _mix_pack(spark, sf_dir, mode):
+def _mix_pack(spark, sf_dir):
     from apache_hadoop_framework_for_peptide_identification_spark.operators import (
         pipeline as P,
     )
@@ -75,11 +77,10 @@ def _mix_pack(spark, sf_dir, mode):
         text_col="clean_text",
         target_total=100,
         budget=512,
-        checkpoint_mode=mode,
     )
 
 
-def _epoch_shuffle(spark, sf_dir, mode):
+def _epoch_shuffle(spark, sf_dir):
     """Narrow projection (id + text-length payload) — the docstring's
     standing advice; the checkpoint still holds every row."""
     from pyspark.sql import functions as F
@@ -94,10 +95,16 @@ def _epoch_shuffle(spark, sf_dir, mode):
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars")
     )
-    return P.epoch_shuffle(d, "doc_id", epoch=1, checkpoint_mode=mode)
+    return P.epoch_shuffle(d, "doc_id", epoch=1)
 
 
 FORMS = {"dedup_mix_pack": _mix_pack, "epoch_shuffle": _epoch_shuffle}
+
+
+def _count(spark, fn, sf_dir, mode) -> int:
+    # the regime is read when the frame is built, so set it first
+    spark.conf.set(CONF, mode)
+    return fn(spark, sf_dir).count()
 
 
 def main() -> None:
@@ -119,11 +126,11 @@ def main() -> None:
     results: dict[str, dict[str, float]] = {}
     for name, fn in FORMS.items():
         for mode in MODES:  # full unmeasured warm-up pass (module doc)
-            fn(spark, args.sf_dir, mode).count()
+            _count(spark, fn, args.sf_dir, mode)
         times: dict[str, float] = {}
         for mode in MODES:
             t0 = time.perf_counter()
-            n = fn(spark, args.sf_dir, mode).count()
+            n = _count(spark, fn, args.sf_dir, mode)
             times[mode] = round(time.perf_counter() - t0, 3)
             print(f"# {name} {mode}: {times[mode]:.2f}s ({n} rows)", flush=True)
         results[name] = times

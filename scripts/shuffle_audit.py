@@ -17,8 +17,8 @@ scans and cached/localCheckpointed BLOCK reads — a query that buys a
 posting index once and reads it from executor memory four times
 reports ~4× the index size as "input" while touching the source
 parquet once (verified: q121's operator at sf0.01 reads 20.1 MB of
-input with materialize='local_checkpoint' and 34 KB — pure file scans
-— with materialize='none'). The column is therefore labeled "input
+input with its posting index materialized and 34 KB — pure file scans
+— with the materialization removed). The column is therefore labeled "input
 (file+cache)"; per-file source bytes at sf0.1 are sub-MiB for every
 table involved.
 

@@ -360,37 +360,6 @@ def test_prefix_jaccard_equals_full_join_ground_truth(spark):
     assert len(got) >= 10  # the planted near-dups all survive 0.6
 
 
-def test_prefix_jaccard_materialize_modes_identical(spark):
-    """ADVICE r8 item 4: the materialization knob is an execution
-    policy, never a semantic one — all three modes produce the same
-    pairs, and an unknown mode refuses loudly. 'persist' is the
-    long-lived-session mode (recomputable on executor loss,
-    reclaimable via unpersist/clearCache), unlike localCheckpoint."""
-    import pytest as _pytest
-
-    rng = random.Random(79)
-    docs = [_doc(rng, 15) for _ in range(20)]
-    rows = [(i, t) for i, t in enumerate(docs)]
-    rows += [(1000 + i, _perturb(rng, docs[i], 1)) for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(mode):
-        return {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in dedup.prefix_jaccard_pairs(
-                df, "doc_id", "text", threshold=0.6, materialize=mode
-            ).collect()
-        }
-
-    base = run("local_checkpoint")
-    assert run("persist") == base
-    assert run("none") == base
-    assert len(base) >= 5
-    spark.catalog.clearCache()
-    with _pytest.raises(ValueError, match="materialize"):
-        dedup.prefix_jaccard_pairs(df, "doc_id", "text", materialize="disk")
-
-
 def test_prefix_jaccard_prefix_is_a_strict_subset(spark):
     """Structural pruning check: at t=0.8 the prefix keeps
     |s| - ceil(0.8|s|) + 1 shingles (~20% + 1), so across a corpus of

@@ -106,3 +106,21 @@ def test_pagerank_broadcast_ranks_parity(spark):
         ).collect()
     }
     assert plain == hinted
+
+
+def test_pagerank_leaves_no_cache_entry(spark):
+    """pagerank_int materializes through reliability.materialize on
+    both join strategies, so a run leaves nothing in the Dataset
+    CacheManager — a persisted edge table would stay there for the
+    session's lifetime with no owner to release it."""
+    edges = spark.createDataFrame(
+        [("a", "b", 3), ("b", "a", 1), ("a", "c", 2), ("c", "a", 5)],
+        "src string, dst string, w long",
+    )
+    spark.catalog.clearCache()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    for broadcast_ranks in (False, True):
+        G.pagerank_int(
+            edges, "src", "dst", "w", iters=4, broadcast_ranks=broadcast_ranks
+        ).collect()
+        assert cache_mgr.isEmpty(), f"broadcast_ranks={broadcast_ranks} left a cache entry"

@@ -440,8 +440,12 @@ def test_prefix_filter_exchanges_carry_hashed_shingles_only(spark):
     plan tree and assert NO exchange output carries a string-typed
     column except ``text`` on the test harness's own RoundRobin
     repartition — and that binary ``sh`` attrs DO ride the shuffles
-    (proof the walker is looking at the live columns)."""
-    from pyspark.sql import functions as F  # noqa: F401
+    (proof the walker is looking at the live columns). The posting
+    index is materialized before its consumers, which swaps its plan
+    for a LogicalRDD; intercepting ``localCheckpoint`` (as ``_plan``
+    does) recovers each materialized frame so its exchanges are walked
+    too."""
+    from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
     from apache_hadoop_framework_for_peptide_identification_spark.catalog import load_table
     from apache_hadoop_framework_for_peptide_identification_spark.operators import dedup
@@ -449,12 +453,27 @@ def test_prefix_filter_exchanges_carry_hashed_shingles_only(spark):
     d = load_table(spark, SF, "documents").repartition(8)
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    orig = _CDF.localCheckpoint
     try:
         from tests.planwalk import exchanges as walk_exchanges
 
         for fn in (dedup.prefix_jaccard_pairs, dedup.containment_prefix_pairs):
-            df = fn(d, "doc_id", "text", n=3, materialize="none")
-            exchanges = walk_exchanges(df)  # AQE-proof shared walker (r18)
+            stages = []
+
+            def recording(self, eager=True, storageLevel=None):
+                stages.append(self)
+                if storageLevel is None:
+                    return orig(self, eager=eager)
+                return orig(self, eager=eager, storageLevel=storageLevel)
+
+            _CDF.localCheckpoint = recording
+            try:
+                df = fn(d, "doc_id", "text", n=3)
+            finally:
+                _CDF.localCheckpoint = orig
+            assert stages, f"{fn.__name__}: no materialization was intercepted"
+            # AQE-proof shared walker (r18), over every stage's plan
+            exchanges = [n for f in stages + [df] for n in walk_exchanges(f)]
             assert exchanges, "no exchanges found — the walker went blind"
             bad, binary_sh = [], 0
             for node in exchanges:
