@@ -22,9 +22,11 @@ Four tiers, all shuffle-bounded (no all-pairs comparison anywhere):
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
 from .reliability import materialize
@@ -69,20 +71,19 @@ def shingles(text_col, n: int = 3):
     )
 
 
-def exploded_shingles(
+def shingle_sets(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, sh) — one row per distinct word n-gram shingle per document,
-    built with the Scala-side ml.feature.NGram transform (4x the
-    interpreted HOF tree; identical output, verified element-for-
-    element at sf0.1). Semantics match :func:`shingles` exactly,
-    including the edge cases (round-5 ADVICE item 1): a document with
-    fewer than ``n`` tokens contributes its whole text as one partial
-    shingle (NGram alone would emit nothing and silently exempt short
-    docs from dedup) — the q113 oracle encodes the same rule — and a
-    NULL-text document emits NO shingles (explode of the null HOF
-    result drops the row), so null-text docs are exempt from
-    similarity dedup rather than pairing as exact duplicates of
+    """(id, sh) — one row per document holding its DISTINCT word n-gram
+    shingles as an array, built with the Scala-side ml.feature.NGram
+    transform (4x the interpreted HOF tree; identical output, verified
+    element-for-element at sf0.1). Semantics match :func:`shingles`
+    exactly, including the edge cases (round-5 ADVICE item 1): a
+    document with fewer than ``n`` tokens holds its whole text as one
+    partial shingle (NGram alone would emit nothing and silently exempt
+    short docs from dedup) — the q113 oracle encodes the same rule —
+    and a NULL-text document has NO row, so null-text docs are exempt
+    from similarity dedup rather than pairing as exact duplicates of
     empty-text docs."""
     from pyspark.ml.feature import NGram
 
@@ -94,7 +95,17 @@ def exploded_shingles(
     arr = F.when(
         F.size("__toks") < n, F.array(F.concat_ws(" ", F.col("__toks")))
     ).otherwise(F.col("__ng"))
-    return ng.select("id", F.explode(F.array_distinct(arr)).alias("sh"))
+    return ng.select("id", F.array_distinct(arr).alias("sh"))
+
+
+def exploded_shingles(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
+) -> DataFrame:
+    """(id, sh) — one row per distinct word n-gram shingle per document:
+    :func:`shingle_sets` exploded."""
+    return shingle_sets(df, id_col, text_col, n).select(
+        "id", F.explode("sh").alias("sh")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -389,6 +400,38 @@ def containment_prefix_pairs(
     ).filter(F.col("containment") >= threshold)
 
 
+@functools.lru_cache(maxsize=None)
+def _minhash_aggs(num_hashes: int) -> tuple[Column, ...]:
+    """The H ``min(xxhash64(h, i))`` signature aggregates. A Column is an
+    unresolved expression tree that each DataFrame resolves afresh (new
+    expression ids per use), so the tuple is built once per process
+    instead of spending ~5 py4j round trips per hash on every call."""
+    return tuple(
+        F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh_{i}") for i in range(num_hashes)
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _band_explode(num_hashes: int, bands: int) -> Column:
+    """The ``bb`` (band, bucket) struct explode over mh_* columns — each
+    band's rows-per-band hash slice collapsed to one xxhash64 bucket
+    key. Built once per (num_hashes, bands), as :func:`_minhash_aggs`."""
+    rows_per_band = num_hashes // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.xxhash64(
+                        *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
+                    ).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -420,9 +463,7 @@ def minhash_signatures(
         text_col,
         shingle_n,
     ).select("id", F.xxhash64("sh").alias("h"))
-    return base.groupBy("id").agg(
-        *[F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh_{i}") for i in range(num_hashes)]
-    )
+    return base.groupBy("id").agg(*_minhash_aggs(num_hashes))
 
 
 def _band_postings(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -432,23 +473,9 @@ def _band_postings(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     full-corpus, incremental, and index-build LSH paths (factored r10;
     structurally identical to the r6–r9 inline form, so q42/q113
     hashes are unchanged)."""
-    rows_per_band = num_hashes // bands
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * rows_per_band + j}") for j in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return sig.select("id", _band_explode(num_hashes, bands)).select(
+        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
 
 
 def minhash_lsh_candidates(
@@ -791,12 +818,17 @@ def ingest_neardup(
     The verify reads TEXT ONLY FOR CANDIDATE DOCS: candidate ids
     semi-join ``corpus_text ∪ batch`` before shingling, so corpus text
     is fetched per collision, not per ingest — at 100 TB the verify's
-    cost follows the (banded, bounded) candidate count. Recall is LSH
-    recall, 1-(1-s^r)^b per pair (≈1 at planted-twin similarities; the
-    q174 oracle hash-match is the proof, same argument as q113).
+    cost follows the (banded, bounded) candidate count. Each candidate
+    pair joins the two docs' distinct-shingle arrays (``shingle_sets``)
+    and takes Jaccard as ``size(array_intersect)`` over the sum of the
+    set sizes minus it: no shingle explode, no per-pair aggregation,
+    and the same integer counts and long/long division as a posting
+    join, so the values are bit-identical to it. Recall is LSH recall,
+    1-(1-s^r)^b per pair (≈1 at planted-twin similarities; the q174
+    oracle hash-match is the proof, same argument as q113).
 
     Batch ids must be disjoint from corpus ids: an id on both sides
-    would silently merge both texts' shingle sets under one id and
+    would silently give one id two texts' shingle sets and
     corrupt every Jaccard it touches (ADVICE r9). ``check_disjoint``
     (default on) runs a limit-1 semi-join probe and raises ValueError
     on overlap; the probe scans only the two id columns with an
@@ -846,33 +878,24 @@ def ingest_neardup(
         )
         .distinct()
     )
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .unionByName(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
+    cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
     texts = h.unionByName(b).join(cand_ids, "id", "left_semi")
-    sh = exploded_shingles(texts, "id", "text", shingle_n)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
-    sb = sh.select(F.col("id").alias("__idb"), F.col("sh").alias("s_b"))
-    inter = (
-        cand.join(sa, "id_a")
-        .join(sb, (F.col("id_b") == F.col("__idb")) & (F.col("s_b") == F.col("s_a")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    sets = shingle_sets(texts, "id", "text", shingle_n)
+    sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
+    sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("s_b"))
+    n_a = F.size("s_a").cast("long")
+    n_b = F.size("s_b").cast("long")
+    inter = F.size(F.array_intersect("s_a", "s_b")).cast("long")
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", inter.alias("inter"), (n_a + n_b).alias("n_ab"))
+        # a pair sharing no shingle is no pair (whatever the threshold)
+        .filter(F.col("inter") > 0)
         .select(
             "id_a",
             "id_b",
-            (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))).alias(
-                "jaccard"
-            ),
+            (F.col("inter") / (F.col("n_ab") - F.col("inter"))).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

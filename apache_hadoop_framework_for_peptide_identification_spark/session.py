@@ -105,6 +105,13 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on — never more task slots than the host can serve."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "ahfpi-spark",
     cpus: int | None = None,
@@ -116,7 +123,7 @@ def get_spark(
     unchanged — everything below is per-session SQL conf, not topology.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # ~cores for local mode; on a cluster this would be
         # ~2-3x total executor cores (AQE coalesces the excess).

@@ -17,6 +17,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import normalize_events_ts
 from ..session import configure
@@ -370,7 +371,7 @@ def _neardup_ingest_batch(
     num_hashes: int,
     bands: int,
     shingle_n: int,
-) -> None:
+) -> StructType:
     """One micro-batch of persisted-store near-dup ingest, shared by
     stream_neardup_ingest and stream_dedup_ladder. Store appends
     FIRST: the batch's signatures are computed by exactly one job (the
@@ -379,21 +380,24 @@ def _neardup_ingest_batch(
     history reads prune batch_id=N — this batch's files are invisible
     to them — and replay-safe because a redone batch overwrites its
     own partition with deterministic content before recomputing pairs
-    against the pruned (pre-batch) store. Returns nothing — a caller
-    that consumes the batch's pairs reads
-    ``{store_dir}/pairs/batch_id={batch_id}`` itself, so the ingest
-    path never pays a read-back it doesn't use."""
+    against the pruned (pre-batch) store. Every store read passes the
+    schema of the frame this function writes to that substore, so no
+    read runs a parquet footer job to infer a schema the code already
+    holds (``batch_id`` is still discovered from the paths). Returns
+    the schema of the ``{store_dir}/pairs/batch_id={batch_id}``
+    partition it writes — a caller that consumes the batch's pairs
+    reads them back with it, so the ingest path never pays a read-back
+    it doesn't use."""
     from ..operators.dedup import build_lsh_index, ingest_neardup
 
-    build_lsh_index(bdf, id_col, text_col, num_hashes, bands, shingle_n).write.mode(
-        "overwrite"
-    ).parquet(f"{store_dir}/postings/batch_id={batch_id}")
-    bdf.select(F.col(id_col), F.col(text_col)).write.mode("overwrite").parquet(
-        f"{store_dir}/texts/batch_id={batch_id}"
-    )
+    postings = build_lsh_index(bdf, id_col, text_col, num_hashes, bands, shingle_n)
+    postings.write.mode("overwrite").parquet(f"{store_dir}/postings/batch_id={batch_id}")
+    batch_texts = bdf.select(F.col(id_col), F.col(text_col))
+    batch_texts.write.mode("overwrite").parquet(f"{store_dir}/texts/batch_id={batch_id}")
     not_self = F.col("batch_id") != F.lit(batch_id)
     index = (
-        spark.read.parquet(f"{store_dir}/postings")
+        spark.read.schema(postings.schema)
+        .parquet(f"{store_dir}/postings")
         .filter(not_self)
         .select("id", "band", "bucket")
         # NOTE (r18, measured and deliberately NOT batch-bounded):
@@ -409,7 +413,8 @@ def _neardup_ingest_batch(
         # shuffles the full store without it.
     )
     texts = (
-        spark.read.parquet(f"{store_dir}/texts")
+        spark.read.schema(batch_texts.schema)
+        .parquet(f"{store_dir}/texts")
         .filter(not_self)
         .select(F.col(id_col), F.col(text_col))
     )
@@ -417,11 +422,17 @@ def _neardup_ingest_batch(
         bdf, index, texts, id_col, text_col,
         threshold=threshold, num_hashes=num_hashes,
         bands=bands, shingle_n=shingle_n,
-        batch_postings=spark.read.parquet(
+        batch_postings=spark.read.schema(postings.schema).parquet(
             f"{store_dir}/postings/batch_id={batch_id}"
         ),
     )
-    pairs.write.mode("overwrite").parquet(f"{store_dir}/pairs/batch_id={batch_id}")
+    # The verify's last join streams the candidate texts, a union of the
+    # store and batch scans; rebalance lets AQE size the pair files
+    # instead (one file per batch at micro-batch scale).
+    pairs.hint("rebalance").write.mode("overwrite").parquet(
+        f"{store_dir}/pairs/batch_id={batch_id}"
+    )
+    return pairs.schema
 
 
 def compact_ingest_store(
@@ -759,12 +770,15 @@ def stream_dedup_ladder(
     labeled the duplicate of its higher-id stored partner — the
     arrival-consistent reading, pinned by pytest.
 
-    Per-batch cost: one Arrow-batched NFC pass over the batch (the
-    normalized frame localCheckpoints ONCE — the q195/q193
-    single-execution rule), one hash equi-join against the keeper
-    store (k_n is a 32-hex key; at 100 TB bucket the keeper store by
-    k_n so this join co-locates), one keeper window over batch
-    misses, and q180's incremental near-dup over new keepers only.
+    Per-batch cost: one Arrow-batched NFC pass over the batch, one hash
+    equi-join against the keeper store (k_n is a 32-hex key; at 100 TB
+    bucket the keeper store by k_n so this join co-locates) and one
+    keeper window over the join, all in ONE localCheckpoint — the
+    q195/q193 single-execution rule: every sink below reads that frame,
+    so the NFC pandas UDF runs once per batch — then q180's incremental
+    near-dup over new keepers only. Store reads pass the schema of the
+    frame that writes the substore (the keeper schema follows the id
+    column's type), so none runs a footer job to infer it.
     """
     from pyspark.sql import Window as W
 
@@ -780,7 +794,6 @@ def stream_dedup_ladder(
         _guard_fresh_checkpoint(
             spark, f"{store_dir}/{sub}", checkpoint_dir, "stream_dedup_ladder"
         )
-    keeper_schema = "k_n string, keeper_id long, keeper_kr string, keeper_ku string"
 
     def fb(bdf: DataFrame, batch_id: int) -> None:
         norm = F.trim(
@@ -790,7 +803,6 @@ def stream_dedup_ladder(
                 " ",
             )
         )
-        # one pandas-UDF execution per batch, whatever the fan-out below
         keyed = (
             bdf.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("raw"))
             .withColumn("__nfc", unicode_normalize(F.col("raw")))
@@ -801,11 +813,15 @@ def stream_dedup_ladder(
                 norm.alias("norm"),
                 F.md5(norm).alias("k_n"),
             )
-            .localCheckpoint()
+        )
+        id_type = bdf.schema[id_col].dataType.simpleString()
+        keeper_schema = (
+            f"k_n string, keeper_id {id_type}, keeper_kr string, keeper_ku string"
         )
         if _max_batch_id(spark, f"{store_dir}/keepers") >= 0:
             kst = (
-                spark.read.parquet(f"{store_dir}/keepers")
+                spark.read.schema(keeper_schema)
+                .parquet(f"{store_dir}/keepers")
                 .filter(F.col("batch_id") != F.lit(batch_id))
                 .select("k_n", "keeper_id", "keeper_kr", "keeper_ku")
                 # deliberately NOT batch-bounded (r18) — see the
@@ -815,37 +831,50 @@ def stream_dedup_ladder(
             )
         else:
             kst = spark.createDataFrame([], keeper_schema)
-        j = keyed.join(kst, "k_n", "left").localCheckpoint()
-        hits = j.filter(F.col("keeper_id").isNotNull())
-        miss = j.filter(F.col("keeper_id").isNull()).select(
-            "doc_id", "k_r", "k_u", "k_n", "norm"
-        )
+        # A k_n is all store hits or all batch misses: hits take the
+        # stored keeper, misses the first arrival (lowest id) of their
+        # k_n. One pandas-UDF execution per batch, whatever the fan-out
+        # below.
         wfull = (
             W.partitionBy("k_n")
             .orderBy("doc_id")
             .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
         )
-        ann = miss.select(
-            "doc_id",
-            "k_r",
-            "k_u",
-            "k_n",
-            "norm",
-            F.first("doc_id").over(wfull).alias("keeper_id"),
-            F.first("k_r").over(wfull).alias("keeper_kr"),
-            F.first("k_u").over(wfull).alias("keeper_ku"),
-        ).localCheckpoint()
-        newk = ann.filter(F.col("doc_id") == F.col("keeper_id"))
+        hit = F.col("keeper_id").isNotNull()
+        ann = (
+            keyed.join(kst, "k_n", "left")
+            .select(
+                "doc_id",
+                "k_r",
+                "k_u",
+                "k_n",
+                "norm",
+                hit.alias("__hit"),
+                *[
+                    F.when(hit, F.col(kc)).otherwise(F.first(c).over(wfull)).alias(kc)
+                    for c, kc in (
+                        ("doc_id", "keeper_id"),
+                        ("k_r", "keeper_kr"),
+                        ("k_u", "keeper_ku"),
+                    )
+                ],
+            )
+            .localCheckpoint()
+        )
+        is_keeper = ~F.col("__hit") & (F.col("doc_id") == F.col("keeper_id"))
+        newk = ann.filter(is_keeper)
         newk.select("k_n", "keeper_id", "keeper_kr", "keeper_ku").write.mode(
             "overwrite"
         ).parquet(f"{store_dir}/keepers/batch_id={batch_id}")
-        _neardup_ingest_batch(
+        pairs_schema = _neardup_ingest_batch(
             spark,
             newk.select(F.col("doc_id").alias(id_col), F.col("norm").alias(text_col)),
             store_dir, batch_id, id_col, text_col,
             threshold, num_hashes, bands, shingle_n,
         )
-        pairs = spark.read.parquet(f"{store_dir}/pairs/batch_id={batch_id}")
+        pairs = spark.read.schema(pairs_schema).parquet(
+            f"{store_dir}/pairs/batch_id={batch_id}"
+        )
         # The neardup flag lands on the ARRIVING side (docstring rule):
         # ingest_neardup orders pairs by id VALUE (id_a < id_b), so for
         # a batch×history pair where the new keeper drew the LOWER id,
@@ -873,12 +902,8 @@ def stream_dedup_ladder(
             .otherwise(F.lit("casefold"))
         )
         tiers = (
-            hits.select("doc_id", by_hash.alias("tier"), "k_n")
-            .unionByName(
-                ann.filter(F.col("doc_id") != F.col("keeper_id")).select(
-                    "doc_id", by_hash.alias("tier"), "k_n"
-                )
-            )
+            ann.filter(~is_keeper)
+            .select("doc_id", by_hash.alias("tier"), "k_n")
             .unionByName(
                 newk.join(nd, "doc_id", "left").select(
                     "doc_id",

@@ -52,7 +52,9 @@ def main() -> None:
     names = sys.argv[3:] or HEADLINE
     outdir.mkdir(parents=True, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="capture-plans")
+    # 32 slots and shuffle partitions whatever the host: the committed
+    # captures carry hashpartitioning(..., 32), so re-captures compare
+    spark = get_spark(app_name="capture-plans", cpus=32)
 
     stages: list[str] = []
     orig_lc = DataFrame.localCheckpoint

@@ -7,7 +7,8 @@ per-row norm hoisting, no explode+agg MinHash trick). This is the code a
 competent PySpark user writes first, which is exactly what the engine's
 2x budget is measured against.
 
-Config matches the bench contract: local[$SPARK_GRAFT_CPUS] (default 32)
+Config matches the bench contract: local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on, as session.default_cpus)
 with shuffle.partitions = cpus, at $SPARK_GRAFT_SF_DIR (default sf0.1).
 Method: 1 warm-up, then best of BENCH_RUNS (default 3) collect() latency.
 
@@ -1157,7 +1158,7 @@ QUERIES = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     n_runs = int(os.environ.get("BENCH_RUNS", "3"))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -186,7 +186,9 @@ def main() -> None:
     import measure_baseline as mb
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from apache_hadoop_framework_for_peptide_identification_spark.session import default_cpus
+
+    cpus = str(default_cpus())
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("scale-sweep-stock")

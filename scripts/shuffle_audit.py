@@ -341,9 +341,10 @@ def main() -> None:
     from apache_hadoop_framework_for_peptide_identification_spark.session import (
         RUNTIME_CONFS,
         configure,
+        default_cpus,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(default_cpus())
 
     def _builder(name):
         return (

@@ -1,5 +1,5 @@
-"""Session plumbing: the Python worker's zip-invalidation guard and the
-package archive shipped to the workers."""
+"""Session plumbing: the Python worker's zip-invalidation guard, the
+package archive shipped to the workers and the default session size."""
 
 from __future__ import annotations
 
@@ -13,7 +13,10 @@ import pyarrow as pa
 import pytest
 
 import apache_hadoop_framework_for_peptide_identification_spark as pkg
-from apache_hadoop_framework_for_peptide_identification_spark.session import _package_zip
+from apache_hadoop_framework_for_peptide_identification_spark.session import (
+    _package_zip,
+    default_cpus,
+)
 
 STOCK_INVALIDATE = zipimport.zipimporter.invalidate_caches
 
@@ -147,3 +150,15 @@ def test_package_zip_keyed_by_source_hash(tmp_path):
         assert z.read("zgpkg/__init__.py") == b"V = 2\n"
         assert sorted(z.namelist()) == ["zgpkg/__init__.py", "zgpkg/sub/__init__.py"]
     assert sorted(os.listdir(out)) == sorted(map(os.path.basename, (first, changed)))
+
+
+def test_default_cpus_follows_env_then_affinity(monkeypatch):
+    """SPARK_GRAFT_CPUS wins; unset or empty, the session gets one task
+    slot per CPU the process may run on, not a fixed 32."""
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert default_cpus() == 6
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cpus() == 3

@@ -1012,6 +1012,117 @@ def _drain_ladder(spark, src, store, ckpt, rows):
     stream_dedup_ladder(stream, store, ckpt, "doc_id", "text", threshold=0.5)
 
 
+def test_stream_dedup_ladder_string_ids_match_long_ids(spark, tmp_path):
+    """The keeper store's schema follows the id column's type: with
+    string doc ids, batch 0 (against the empty store) and batch 1
+    (reading batch 0's keepers, postings, texts and pairs back with
+    their written schemas) label every doc with the tier the long-id
+    run gives its twin."""
+    from apache_hadoop_framework_for_peptide_identification_spark.streaming.windows import (
+        stream_dedup_ladder,
+    )
+
+    batches = [
+        [(1, "Alpha beta gamma delta epsilon zeta."),
+         (2, "Alpha beta gamma delta epsilon zeta."),
+         (3, "one two three four five six seven")],
+        [(10, "alpha beta gamma delta epsilon zeta"),
+         (11, "one two three four five six"),
+         (12, "completely different novel words entirely")],
+    ]
+
+    def run(id_type, key):
+        store, src, ckpt = (str(tmp_path / f"{d}_{id_type}") for d in ("store", "src", "ck"))
+        for rows in batches:
+            spark.createDataFrame(
+                [(key(i), t) for i, t in rows], f"doc_id {id_type}, text string"
+            ).repartition(1).write.mode("append").parquet(src)
+            stream = spark.readStream.schema(f"doc_id {id_type}, text string").parquet(src)
+            stream_dedup_ladder(stream, store, ckpt, "doc_id", "text", threshold=0.5)
+        for sub, field in (("keepers", "keeper_id"), ("pairs", "id_a"), ("tiers", "doc_id")):
+            stored = spark.read.parquet(f"{store}/{sub}").schema[field].dataType
+            assert stored.simpleString() == {"long": "bigint", "string": "string"}[id_type]
+        tiers = {r["doc_id"]: r["tier"] for r in spark.read.parquet(f"{store}/tiers").collect()}
+        pairs = {(r["id_a"], r["id_b"]) for r in spark.read.parquet(f"{store}/pairs").collect()}
+        return tiers, pairs
+
+    # zero-padded, so string order is id order (keeper = lowest id)
+    skey = lambda i: f"d{i:03d}"  # noqa: E731
+    long_tiers, long_pairs = run("long", int)
+    str_tiers, str_pairs = run("string", skey)
+    assert long_tiers == {
+        1: "kept", 2: "exact", 3: "kept", 10: "casefold", 11: "neardup", 12: "kept",
+    }
+    assert str_tiers == {skey(i): t for i, t in long_tiers.items()}
+    assert str_pairs == {(skey(a), skey(b)) for a, b in long_pairs} == {(skey(3), skey(11))}
+
+
+def test_stream_dedup_ladder_jobs_per_micro_batch(spark, tmp_path):
+    """A warm ladder micro-batch against a two-batch store runs at most
+    24 Spark jobs on these files (33 with a parquet footer job per store
+    read and three keeper-resolution checkpoints). Spark tags every job
+    of a streaming run with the run id as its job group, so the drain's
+    jobs are counted through the status tracker."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def text(i):  # 12 words no other doc shares
+        return " ".join(f"w{(i * 7919 + k * 104729) % 100003}" for k in range(12))
+
+    store, src, ckpt = (str(tmp_path / d) for d in ("store", "src", "ck"))
+    files = [
+        [(i, text(i)) for i in range(0, 20)],
+        [(i, text(i)) for i in range(20, 40)]
+        + [(100, text(3)), (101, text(5).upper() + ".")],
+        [(i, text(i)) for i in range(40, 60)]
+        + [(102, text(25).rsplit(" ", 1)[0]), (103, text(21)), (104, text(45))],
+    ]
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        for rows in files:
+            _drain_ladder(spark, src, store, ckpt, rows)
+    finally:
+        spark.streams.removeListener(listener)
+    # onQueryStarted is delivered before the run starts, one per drain
+    assert len(listener.ids) == len(files)
+    tracker = spark.sparkContext.statusTracker()
+    # the status store is fed asynchronously; wait until the count settles
+    jobs, deadline = [], time.time() + 10
+    while time.time() < deadline:
+        now = tracker.getJobIdsForGroup(listener.ids[-1])
+        if now and len(now) == len(jobs):
+            break
+        jobs = now
+        time.sleep(0.5)
+    assert 0 < len(jobs) <= 24, sorted(jobs)
+    tiers = {r["doc_id"]: r["tier"] for r in spark.read.parquet(f"{store}/tiers").collect()}
+    assert tiers == {
+        **{i: "kept" for i in range(60)},
+        100: "exact", 101: "casefold", 102: "neardup", 103: "exact", 104: "exact",
+    }
+    assert {
+        (r["id_a"], r["id_b"]) for r in spark.read.parquet(f"{store}/pairs").collect()
+    } == {(25, 102)}
+
+
 def test_compact_ingest_store_preserves_neardup_results(spark, tmp_path):
     """r15 compaction operator (the measured store-fragmentation tax's
     API, BASELINE.md "Streaming-ingest throughput"): a mid-stream
