@@ -3,7 +3,7 @@
 
 PY ?= python
 
-.PHONY: test sweep-sf01 bench baseline ann-curves scale-data scale-sweep heaps-sweep shuffle-audit stream-throughput crawl-throughput crawl-compact-probe quality-gate-calibration checkpoint-tax
+.PHONY: test sweep-sf01 bench baseline ann-curves scale-data scale-sweep heaps-sweep shuffle-audit skew-audit stream-throughput crawl-throughput crawl-compact-probe quality-gate-calibration checkpoint-tax
 
 # Full unit + oracle suite at the fast fixtures (sf0.001 oracle dir).
 test:
@@ -47,11 +47,17 @@ heaps-sweep:
 	  --scales hx1,hx3,hx10 --engine-only
 
 # The BASELINE.md r15 data-movement audit: measured per-query shuffle /
-# scan / spill bytes (Spark monitoring REST API), engine vs stock at
+# scan / spill bytes (Spark's event log), engine vs stock at
 # $$SPARK_GRAFT_SF_DIR — the "detection ships hashes, never text" plan
 # pins as measured bytes.
 shuffle-audit:
 	$(PY) scripts/shuffle_audit.py
+
+# The BASELINE.md r15 task-skew audit: max/median task time and
+# shuffle-read bytes on each run's dominant exchange (Spark's event
+# log), q168/q173, engine vs stock, contract and forced-shuffle probe.
+skew-audit:
+	$(PY) scripts/skew_audit.py
 
 # The BASELINE.md r15 streaming-ingest measurement: per-micro-batch
 # fixed cost + store-fragmentation tax for stream_neardup_ingest and

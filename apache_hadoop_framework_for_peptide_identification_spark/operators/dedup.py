@@ -189,7 +189,6 @@ def prefix_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.6,
-    hash_postings: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard-≥-threshold pairs via prefix filtering (SSJoin /
     PPJoin, Chaudhuri'06 / Xiao'08) — the scale path for exact
@@ -234,10 +233,7 @@ def prefix_jaccard_pairs(
     1.35× wall (compute + incompressible binary exchange vs short
     compressible strings) — priced and recorded; the default stays
     md5 because the 100 TB target is real text and the bounded
-    exchange width is what survives a scale-up. ``hash_postings=False``
-    keeps the raw string payload for exactly that A/B measurement on a
-    user's own corpus (switch it for a corpus measured into the
-    penalty regime); results are identical either way.
+    exchange width is what survives a scale-up.
 
     Shuffles: one posting exchange keyed on shingle (the df count
     window), per-doc position window, prefix self-join, pair-verify
@@ -245,8 +241,7 @@ def prefix_jaccard_pairs(
     (id_a, id_b, jaccard), id_a < id_b.
     """
     sh = exploded_shingles(df, id_col, text_col, n)
-    if hash_postings:
-        sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
+    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
     # Document frequency as a count window over sh (r19): the former
     # groupBy("sh") + join back re-ran the corpus shingle explode
     # TWICE (once per consumer of `sh`, pre-materialization) and
@@ -312,7 +307,6 @@ def containment_prefix_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.9,
-    hash_postings: bool = True,
 ) -> DataFrame:
     """EXACT containment-≥-threshold ORDERED pairs via the ASYMMETRIC
     prefix filter — the scale path for excerpt/quote detection
@@ -337,11 +331,10 @@ def containment_prefix_pairs(
     this plan.
 
     Posting payload is the 16-byte md5 of each shingle, never the raw
-    string (r16 — same rationale, exactness class, entropy-
-    independence argument, and measurement-only ``hash_postings``
-    escape hatch as prefix_jaccard_pairs; the asymmetric theorem
-    likewise only needs ONE consistent order shared by the A-prefixes
-    and the B-side full posting lists).
+    string (r16 — same rationale, exactness class and entropy-
+    independence argument as prefix_jaccard_pairs; the asymmetric
+    theorem likewise only needs ONE consistent order shared by the
+    A-prefixes and the B-side full posting lists).
 
     Shuffles: one posting exchange keyed on shingle (the df count
     window), per-doc position window, prefix⋈full posting join,
@@ -350,8 +343,7 @@ def containment_prefix_pairs(
     point: a 20-token crop is contained in its 54-token source at 1.0
     while the reverse direction scores ~0.35)."""
     sh = exploded_shingles(df, id_col, text_col, n)
-    if hash_postings:
-        sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
+    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
     # Document frequency as a count window over sh — one posting
     # shuffle instead of groupBy + join back (r19; rationale and
     # measurement at the identical prefix_jaccard_pairs site).
@@ -695,7 +687,6 @@ def minhash_jaccard_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     max_bucket: int | None = None,
-    hash_postings: bool = True,
 ) -> DataFrame:
     """The full MinHash-LSH dedup PIPELINE: banded candidates (see
     minhash_lsh_candidates) followed by an exact n-gram Jaccard verify
@@ -719,17 +710,15 @@ def minhash_jaccard_pairs(
     keyed exchanges). Intersection counts are unchanged — md5 is
     injective on distinct shingles up to the negligible 2^-64
     collision measure, the same recorded argument — so Jaccard values
-    and every downstream hash verdict are bit-identical.
-    ``hash_postings=False`` is the measurement hatch (the q121/q165
-    A/B precedent: md5 costs ~1.1× on low-entropy synthetic text,
+    and every downstream hash verdict are bit-identical. As in the
+    q121/q165 A/B, md5 costs ~1.1× on low-entropy synthetic text,
     wins on high-entropy real text, and bounds exchange width either
-    way)."""
+    way (BASELINE.md r18)."""
     cand = minhash_lsh_candidates(
         df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket
     )
     sh = exploded_shingles(df, id_col, text_col, shingle_n)
-    if hash_postings:
-        sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
+    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
     # Materialized once: the verify consumes `sh` three times (the
     # per-doc sizes and both posting sides), each consumer otherwise
     # re-running the corpus shingle explode + md5 (16-byte posting

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..operators import html as H
 from ..operators import urls as U
 from ..operators import warc as W
-from .windows import _guard_fresh_checkpoint
+from .windows import _batch_ids, _guard_fresh_checkpoint
 
 _KEEPER_SUB = "url_keepers"
 
@@ -76,22 +76,8 @@ def _has_keeper_partitions(
     """True when the store holds ANY batch_id partition other than the
     excluded one — INCLUDING the batch_id=-1 seed, which max-based
     probes miss."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/{_KEEPER_SUB}")
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        return False
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if exclude_batch is None or b != exclude_batch:
-                return True
-    return False
+    ids = _batch_ids(spark, f"{store_dir}/{_KEEPER_SUB}") or []
+    return any(b != exclude_batch for b in ids)
 
 
 def _keeper_window() -> Window:

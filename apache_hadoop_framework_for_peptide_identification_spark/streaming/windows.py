@@ -206,25 +206,31 @@ def stream_enrich_refreshed(
     q.awaitTermination()
 
 
-def _max_batch_id(spark: SparkSession, path: str) -> int:
-    """Highest batch_id=N partition under ``path`` (-1 when none/absent)
-    — Hadoop FS listing so the probe works on any scheme, shared by
-    the store-backed streaming operators' fresh-checkpoint guards."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(hconf)
+def _batch_ids(spark: SparkSession, path: str) -> list[int] | None:
+    """The N of every ``batch_id=N`` partition directory under ``path``,
+    or None when ``path`` does not exist. Hadoop FS listing, so it works
+    on any scheme; a ``batch_id=`` name that is not an integer is a
+    foreign layout dir and is skipped."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(p):
-        return -1
-    best = -1
+        return None
+    ids = []
     for st in fs.listStatus(p):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("batch_id="):
             try:
-                best = max(best, int(name.split("=", 1)[1]))
+                ids.append(int(name.split("=", 1)[1]))
             except ValueError:
                 continue
-    return best
+    return ids
+
+
+def _max_batch_id(spark: SparkSession, path: str) -> int:
+    """Highest batch_id=N partition under ``path`` (-1 when none/absent),
+    shared by the store-backed streaming operators' fresh-checkpoint
+    guards."""
+    return max(_batch_ids(spark, path) or [-1])
 
 
 def _guard_fresh_checkpoint(
@@ -578,7 +584,7 @@ def compact_ingest_store(
                 try:
                     batch_dirs.append(int(name.split("=", 1)[1]))
                 except ValueError:
-                    continue  # foreign layout dir — same tolerance as _max_batch_id
+                    continue  # foreign layout dir — same tolerance as _batch_ids
             elif name.startswith(".compact_tmp."):
                 tmp_names.append(name)
         for name in tmp_names:
@@ -684,23 +690,11 @@ def ingest_store_fragmentation(
     monitoring probe must stay readable mid-crash (contrast
     compact_ingest_store, which raises — mutation needs the guard,
     observation doesn't)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     per_sub: dict[str, list[int]] = {}
     for sub in substores:
-        p = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/{sub}")
-        fs = p.getFileSystem(hconf)
-        if not fs.exists(p):
-            continue
-        batches: list[int] = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch_id="):
-                try:
-                    batches.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue  # foreign layout dir — same tolerance as compaction
-        per_sub[sub] = batches
+        batches = _batch_ids(spark, f"{store_dir}/{sub}")
+        if batches is not None:
+            per_sub[sub] = batches
     max_b = max((max(b) for b in per_sub.values() if b), default=-1)
     horizon = max_b - 1
     subs = {}

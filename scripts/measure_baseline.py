@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Measure the plain-PySpark baseline for BASELINE.md.
 
-Stock-Spark implementations of the bench headliners — NO engine imports,
-no engine-specific optimizations (no table cache, no broadcast hints, no
+Stock-Spark implementations of the bench headliners — no engine imports
+(session.default_cpus alone sizes the session the way the engine's
+is), no engine-specific optimizations (no table cache, no broadcast hints, no
 per-row norm hoisting, no explode+agg MinHash trick). This is the code a
 competent PySpark user writes first, which is exactly what the engine's
 2x budget is measured against.
@@ -27,6 +28,28 @@ import pandas as pd
 
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from apache_hadoop_framework_for_peptide_identification_spark.session import (  # noqa: E402
+    default_cpus,
+)
+
+
+def stock_builder(app_name: str) -> SparkSession.Builder:
+    """The stock-Spark session every script's stock side runs on: the
+    engine's slot count (``default_cpus``) and driver heap
+    (``SPARK_DRIVER_MEM``), none of its confs. ``nanosAsLong`` only
+    lets the nanos generation of ``events`` load (see ``tables``)."""
+    cpus = str(default_cpus())
+    return (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.ui.enabled", "false")
+    )
 
 
 def tables(spark: SparkSession, sf: str):
@@ -1158,18 +1181,10 @@ QUERIES = {
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     n_runs = int(os.environ.get("BENCH_RUNS", "3"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("baseline")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = stock_builder("baseline").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = default_cpus()
     only = sys.argv[1:] or list(QUERIES)
     timings = {}
     for name in only:

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Per-query bench profiler (guide §1): times each headline query with
 the noop sink (computation only, no collect-to-driver) AND with the
-bench's collect(), and counts the Spark jobs each query launches.
+bench's collect(), and counts the Spark jobs each query launches,
+read from Spark's event log (scripts/eventlog.py) once the session
+has stopped.
 
 Job count matters at this scale: every extra action (sizing count,
 localCheckpoint materialization, centroid collect) pays fixed
@@ -20,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import eventlog  # noqa: E402
 from bench import HEADLINE  # noqa: E402
 from apache_hadoop_framework_for_peptide_identification_spark.queries import (  # noqa: E402
     BENCH_REGISTRY,
@@ -31,36 +34,28 @@ from apache_hadoop_framework_for_peptide_identification_spark.session import get
 def main() -> None:
     names = sys.argv[1:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="profile-bench")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     out = {}
+    with eventlog.event_log() as log_dir:
+        spark = get_spark(app_name="profile-bench")
+        sc = spark.sparkContext
+        for name in names:
+            fn = (REGISTRY.get(name) or BENCH_REGISTRY[name]).fn
+            sc.setJobGroup(f"profile:{name}:warmup", f"profile:{name} warm-up")
+            fn(spark, sf_dir).collect()  # warm-up
+            sc.setJobGroup(f"profile:{name}:timed", f"profile:{name}")
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).collect()
+            t_collect = time.perf_counter() - t0
+            sc.setJobGroup(f"profile:{name}:noop", f"profile:{name} noop")
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            t_noop = time.perf_counter() - t0
+            out[name] = {"collect_s": round(t_collect, 4), "noop_s": round(t_noop, 4)}
+        groups = eventlog.stop_and_read(spark, log_dir)
     for name in names:
-        fn = (REGISTRY.get(name) or BENCH_REGISTRY[name]).fn
-        sc.setJobGroup(f"profile:{name}:warmup", f"profile:{name} warm-up")
-        fn(spark, sf_dir).collect()  # warm-up
-        # Count jobs in a per-query group (ADVICE r19): the default
-        # group's id list is shared by every query in the sweep and
-        # capped by spark.ui.retainedJobs, so a global-delta count
-        # undercounts late queries on long runs.
-        group = f"profile:{name}:timed"
-        sc.setJobGroup(group, f"profile:{name}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        t_collect = time.perf_counter() - t0
-        n_jobs = len(tracker.getJobIdsForGroup(group) or [])
-        sc.setJobGroup(f"profile:{name}:noop", f"profile:{name} noop")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_noop = time.perf_counter() - t0
-        out[name] = {
-            "collect_s": round(t_collect, 4),
-            "noop_s": round(t_noop, 4),
-            "jobs": n_jobs,
-        }
+        out[name]["jobs"] = groups[f"profile:{name}:timed"]["jobs"]
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps(out, indent=1))
-    spark.stop()
 
 
 if __name__ == "__main__":

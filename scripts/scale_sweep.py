@@ -3,7 +3,7 @@
 VERDICT r13 item 2: turn "no quadratic term by construction" into a
 measured exponent). Runs the ENGINE forms (registry q121 / q177 /
 q182 / q164 + bench q67) and their STOCK-Spark twins
-(scripts/measure_baseline.py, engine-import-free) over the
+(scripts/measure_baseline.py, no engine operators) over the
 self-similar .scaledata fixtures (gen_scale_fixtures.py: x1 = the
 sf0.1 shape, x3, x10) and reports per-query wall time at every scope
 plus the fitted exponent a in T ~ N^a between the two largest scopes
@@ -22,8 +22,8 @@ then a single measured collect per scope (best-of is wasted here —
 the exponent divides two readings taken seconds apart in one
 session; +-10% noise moves a 10x exponent by ~0.04). Engine and
 stock run in SEPARATE sessions with their own contracts (engine:
-session.get_spark with the runtime confs; stock: the plain builder
-measure_baseline.py uses), sequentially in one process.
+session.get_spark with the runtime confs; stock:
+measure_baseline.stock_builder), sequentially in one process.
 
 Usage: python scripts/scale_sweep.py [--stock-budget 180]
          [--queries q121_prefix_jaccard_corpus,...] [--scales x1,x3,x10]
@@ -184,21 +184,11 @@ def main() -> None:
 
     # ------------------------------------------------- stock session
     import measure_baseline as mb
-    from pyspark.sql import SparkSession
 
-    from apache_hadoop_framework_for_peptide_identification_spark.session import default_cpus
-
-    cpus = str(default_cpus())
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-sweep-stock")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = mb.stock_builder("scale-sweep-stock").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    # the job group _run_budgeted cancels at its wall
+    spark.sparkContext.setJobGroup("scale-sweep-stock", "stock scopes", True)
     for q in queries:
         fn = getattr(mb, STOCK_NAMES.get(q, q))
         scopes = ["x03", "x1"] if q == "q164_shared_span_pairs" else ["x1", "x3"]
@@ -248,25 +238,29 @@ def main() -> None:
 
 def _run_budgeted(spark, fn, d, wall: float) -> tuple[float, bool]:
     """Run one collect under a hard wall-clock kill: a watchdog thread
-    cancels the job group at ``wall`` seconds (interrupt-on-cancel), so
-    a mis-projected scope costs at most the wall, not an unbounded
-    quadratic run. Returns (elapsed, aborted). Only a failure AFTER the
-    watchdog actually fired counts as an abort — any other exception
-    (missing fixture dir, analysis error, OOM) re-raises, so a genuine
-    failure is never misreported as a wall-clock kill."""
+    cancels the caller's job group at ``wall`` seconds (the caller sets
+    it with interruptOnCancel), so a mis-projected scope costs at most
+    the wall, not an unbounded quadratic run. The group is left as the
+    caller set it, so its jobs stay attributed to it. Returns (elapsed,
+    aborted). Only a failure AFTER the watchdog actually fired counts
+    as an abort — any other exception (missing fixture dir, analysis
+    error, OOM) re-raises, so a genuine failure is never misreported as
+    a wall-clock kill."""
     import threading
 
     sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    if group is None:
+        raise ValueError("_run_budgeted cancels the caller's job group: set one first")
     ev = threading.Event()
     fired = threading.Event()
 
     def killer() -> None:
         if not ev.wait(wall):
             fired.set()
-            sc.cancelJobGroup("scale-sweep-wall")
+            sc.cancelJobGroup(group)
 
     th = threading.Thread(target=killer, daemon=True)
-    sc.setJobGroup("scale-sweep-wall", "budgeted extra scope", True)
     th.start()
     t0 = time.perf_counter()
     try:
@@ -278,7 +272,6 @@ def _run_budgeted(spark, fn, d, wall: float) -> tuple[float, bool]:
         raise
     finally:
         ev.set()
-        sc.setJobGroup("scale-sweep-default", "")
 
 
 def _report(queries, results, notes) -> None:

@@ -8,9 +8,8 @@ tests/test_plans.py). This script turns those pins into MEASURED bytes,
 the way scripts/scale_sweep.py turned "no quadratic term" into measured
 exponents: run each heavy query once per side and read the per-stage
 executor metrics (shuffle write/read bytes+records, input bytes, memory
-+disk spill) from Spark's monitoring REST API (the public
-/api/v1/applications/{app}/stages surface every Spark UI is built on —
-local mode serves it the same as a cluster).
++disk spill) from Spark's event log (scripts/eventlog.py), read once
+the session has stopped.
 
 Reading the input column: Spark's task inputMetrics count BOTH file
 scans and cached/localCheckpointed BLOCK reads — a query that buys a
@@ -23,16 +22,17 @@ input with its posting index materialized and 34 KB — pure file scans
 table involved.
 
 Method: engine and stock run in SEPARATE sequential sessions (engine:
-the bench-contract confs with the UI enabled; stock: the plain
-measure_baseline.py builder, UI enabled) in one process. Per query:
-snapshot the set of completed stage ids, run ONE collect(), then sum
-metrics over newly-completed stages. Bytes are deterministic per plan —
-no best-of-N needed (unlike wall time); the wall column here is a
-single-run courtesy reading, not the bench. Skipped stages (AQE reused
-exchanges) execute no tasks and are correctly excluded by the
-status=complete filter. Stock runs are wrapped in the scale_sweep hard
-wall-clock kill (default 420 s) so a mis-sized stock scope costs at
-most the wall; a kill is printed and recorded as aborted, never silent.
+session.get_spark; stock: measure_baseline.stock_builder) in one
+process, both writing Spark's event log. Per query: run ONE collect()
+under its own job group, then, once the session has stopped, sum the
+metrics of the group's completed stage attempts. Bytes are
+deterministic per plan — no best-of-N needed (unlike wall time); the
+wall column here is a single-run courtesy reading, not the bench.
+Skipped stages (AQE reused exchanges) are never submitted, so they
+execute no tasks and add nothing. Stock runs are wrapped in the
+scale_sweep hard wall-clock kill (default 420 s) so a mis-sized stock
+scope costs at most the wall; a kill is printed and recorded as
+aborted, never silent.
 
 Usage: python scripts/shuffle_audit.py [--queries q177_...,q182_...]
          [--stock-wall 420] [--engine-only] [--bench]
@@ -51,10 +51,11 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import eventlog  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -83,6 +84,8 @@ STOCK_NAMES = {
     "q42_dedup_minhash_lsh": "q42_minhash_lsh",
     "q195_dedup_ladder_e2e": None,
     "ivfpq_query_prod": None,
+    "minhash_verify_md5": None,
+    "minhash_verify_md5_hient": None,
 }
 
 
@@ -124,20 +127,17 @@ def _ivfpq_prod_form(spark):
     return run
 
 
-def _minhash_verify_form(hash_postings, high_entropy=False):
-    """md5-vs-raw posting A/B for minhash_jaccard_pairs' verify join
-    (r18 — the q121/q165 measured-bytes treatment applied to the
-    verify whose postings went md5 this round): the FULL pipeline
-    (banded candidates + exact-Jaccard verify) over the sf0.1
-    documents corpus, once with the default 16-byte md5 postings and
-    once through the hash_postings=False hatch. The claim under audit:
-    identical candidate/signature stages, verify posting exchanges
-    bounded at 16 B/shingle vs raw-string width. Broadcast joins are
+def _minhash_verify_form(high_entropy=False):
+    """Shuffled bytes of minhash_jaccard_pairs' verify join (r18 — the
+    q121/q165 measured-bytes treatment): the FULL pipeline (banded
+    candidates + exact-Jaccard verify) over the sf0.1 documents
+    corpus, whose verify postings are 16-byte md5s (BASELINE.md r18
+    records the A/B against raw-string postings). Broadcast joins are
     disabled INSIDE the measured window: at this fixture scope the
     posting sides fit the session's 64 MiB broadcast threshold and
-    the width difference would never touch a shuffle — at corpus
-    scale they cannot broadcast, and the shuffled plan is the shape
-    the md5 claim is about."""
+    the posting width would never touch a shuffle — at corpus scale
+    they cannot broadcast, and the shuffled plan is the shape the md5
+    claim is about."""
 
     def form(spark):
         from pyspark.sql import functions as F
@@ -172,7 +172,6 @@ def _minhash_verify_form(hash_postings, high_entropy=False):
                 dedup.minhash_jaccard_pairs(
                     d, "doc_id", "text", threshold=0.5,
                     num_hashes=64, bands=16, shingle_n=3,
-                    hash_postings=hash_postings,
                 ).collect()
             finally:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
@@ -187,89 +186,9 @@ def _minhash_verify_form(hash_postings, high_entropy=False):
 # setup (index builds) and returning the measured-window callable.
 CUSTOM_FORMS = {
     "ivfpq_query_prod": _ivfpq_prod_form,
-    "minhash_verify_md5": _minhash_verify_form(True),
-    "minhash_verify_raw": _minhash_verify_form(False),
-    "minhash_verify_md5_hient": _minhash_verify_form(True, high_entropy=True),
-    "minhash_verify_raw_hient": _minhash_verify_form(False, high_entropy=True),
+    "minhash_verify_md5": _minhash_verify_form(),
+    "minhash_verify_md5_hient": _minhash_verify_form(high_entropy=True),
 }
-
-FIELDS = (
-    "inputBytes",
-    "shuffleWriteBytes",
-    "shuffleWriteRecords",
-    "shuffleReadBytes",
-    "memoryBytesSpilled",
-    "diskBytesSpilled",
-)
-
-
-def sum_new_stages(stages: list[dict], seen: set) -> tuple[dict, set]:
-    """Sum FIELDS over completed stages not in ``seen``.
-
-    Pure (REST-free) so the attribution arithmetic is pytest-able:
-    tests/test_scripts.py feeds it fake StageData dicts. Keys are
-    (stageId, attemptId) — a retried stage re-executes its tasks, and
-    both attempts' bytes genuinely moved."""
-    totals = dict.fromkeys(FIELDS, 0)
-    ids = set(seen)
-    for s in stages:
-        key = (s["stageId"], s.get("attemptId", 0))
-        if key in ids or s.get("status") != "COMPLETE":
-            continue
-        ids.add(key)
-        for f in FIELDS:
-            totals[f] += int(s.get(f, 0))
-    return totals, ids
-
-
-class _UiReader:
-    """Minimal client for the session's monitoring REST API."""
-
-    def __init__(self, spark) -> None:
-        ui = spark.sparkContext.uiWebUrl
-        if not ui:
-            raise RuntimeError("shuffle_audit needs spark.ui.enabled=true")
-        app = spark.sparkContext.applicationId
-        self._url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-        self._seen: set = set()
-
-    def _fetch(self) -> list[dict]:
-        with urllib.request.urlopen(self._url, timeout=30) as r:
-            return json.load(r)
-
-    def snapshot(self) -> None:
-        # Same settle-poll as delta(): the listener bus is async, and a
-        # single fetch here would let a warm-up stage landing a beat
-        # later be mis-attributed to the first audited query
-        # (code-review r15 finding).
-        self.delta()
-
-    def delta(self) -> dict:
-        # The UI's listener bus is async; completed stages can land a
-        # beat after collect() returns. Poll until the totals settle.
-        prev = None
-        for _ in range(20):
-            totals, ids = sum_new_stages(self._fetch(), self._seen)
-            if prev == totals:
-                self._seen = ids
-                return totals
-            prev = totals
-            time.sleep(0.25)
-        # Exhausted without two identical consecutive reads: on a loaded
-        # machine the next query's delta could silently absorb the bytes
-        # still landing — the exact mis-attribution this poll exists to
-        # prevent (ADVICE r15). Mark the row so an unsettled reading is
-        # visible in both the console output and the recorded JSON.
-        print(
-            "shuffle_audit: WARNING — stage totals did not settle within the "
-            "poll budget; this reading may under-attribute bytes into the "
-            "next query's delta",
-            flush=True,
-        )
-        self._seen = ids
-        totals["unsettled"] = True
-        return totals
-
 
 def _fmt_bytes(n: int) -> str:
     if n >= 1 << 20:
@@ -279,24 +198,85 @@ def _fmt_bytes(n: int) -> str:
     return f"{n} B"
 
 
-def _audit_one(reader, label, q, run, results) -> None:
-    reader.snapshot()
+def _audit_one(sc, side, q, run, runs) -> None:
+    """One measured run under the job group ``<side>:<q>``; jobs after it
+    (the next form's set-up) fall into an unmeasured group."""
+    sc.setJobGroup(f"{side}:{q}", q, True)
     t0 = time.perf_counter()
     aborted = run()
-    wall = time.perf_counter() - t0
-    d = reader.delta()
-    d["wall_s"] = round(wall, 2)
-    if aborted:
-        d["aborted"] = True
-    results[q][label] = d
-    print(
-        f"{label:6s} {q}: wall {wall:.2f} s, input {_fmt_bytes(d['inputBytes'])}, "
-        f"shuffle write {_fmt_bytes(d['shuffleWriteBytes'])} "
-        f"({d['shuffleWriteRecords']:,} rows), read {_fmt_bytes(d['shuffleReadBytes'])}, "
-        f"spill {_fmt_bytes(d['memoryBytesSpilled'] + d['diskBytesSpilled'])}"
-        + (" [ABORTED AT WALL — bytes are a lower bound]" if aborted else ""),
-        flush=True,
+    runs[q] = (time.perf_counter() - t0, aborted)
+    sc.setJobGroup("unmeasured", "")
+
+
+def _read(groups, side, runs, results) -> None:
+    for q, (wall, aborted) in runs.items():
+        d = eventlog.totals(groups[f"{side}:{q}"]["stages"])
+        d["wall_s"] = round(wall, 2)
+        if aborted:
+            d["aborted"] = True
+        results[q][side] = d
+        print(
+            f"{side:6s} {q}: wall {wall:.2f} s, input {_fmt_bytes(d['inputBytes'])}, "
+            f"shuffle write {_fmt_bytes(d['shuffleWriteBytes'])} "
+            f"({d['shuffleWriteRecords']:,} rows), read {_fmt_bytes(d['shuffleReadBytes'])}, "
+            f"spill {_fmt_bytes(d['memoryBytesSpilled'] + d['diskBytesSpilled'])}"
+            + (" [ABORTED AT WALL — bytes are a lower bound]" if aborted else ""),
+            flush=True,
+        )
+
+
+def _sessions(args, queries, results, log_dir) -> None:
+    from apache_hadoop_framework_for_peptide_identification_spark.queries import (
+        BENCH_REGISTRY,
+        REGISTRY,
     )
+    from apache_hadoop_framework_for_peptide_identification_spark.session import get_spark
+
+    # ------------------------------------------------ engine session
+    spark = get_spark(app_name="shuffle-audit-engine")
+    spark.sparkContext.setLogLevel("ERROR")
+    runs: dict[str, tuple[float, bool]] = {}
+    # Session warm-up (first-query JIT/codegen noise) on a query OUTSIDE
+    # the audit set, in no measured job group.
+    REGISTRY["q40_dedup_exact"].fn(spark, SF_DIR).collect()
+    for q in queries:
+        if q in CUSTOM_FORMS:
+            # setup (index build/encode) runs outside the query's job
+            # group, so its stages never enter the measured window
+            _audit_one(spark.sparkContext, "engine", q, CUSTOM_FORMS[q](spark), runs)
+            continue
+        qd = REGISTRY.get(q) or BENCH_REGISTRY[q]
+        _audit_one(
+            spark.sparkContext, "engine", q,
+            lambda qd=qd: (qd.fn(spark, SF_DIR).collect(), False)[1],
+            runs,
+        )
+    _read(eventlog.stop_and_read(spark, log_dir), "engine", runs, results)
+
+    if args.engine_only:
+        return
+    # ------------------------------------------------- stock session
+    import measure_baseline as mb
+    from scale_sweep import _run_budgeted
+
+    spark = mb.stock_builder("shuffle-audit-stock").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    runs = {}
+    mb.q40_dedup_exact(mb.tables(spark, SF_DIR)).collect()  # warm-up
+    for q in queries:
+        stock_name = STOCK_NAMES.get(q, q)
+        if stock_name is None:
+            print(f"stock  {q}: no stock twin (composition query) — engine-only row", flush=True)
+            continue
+        fn = getattr(mb, stock_name)
+        _audit_one(
+            spark.sparkContext, "stock", q,
+            lambda fn=fn: _run_budgeted(
+                spark, lambda d: fn(mb.tables(spark, d)), SF_DIR, args.stock_wall,
+            )[1],
+            runs,
+        )
+    _read(eventlog.stop_and_read(spark, log_dir), "stock", runs, results)
 
 
 def main() -> None:
@@ -331,86 +311,8 @@ def main() -> None:
 
     results: dict[str, dict[str, dict]] = {q: {} for q in queries}
 
-    # ------------------------------------------------ engine session
-    from pyspark.sql import SparkSession
-
-    from apache_hadoop_framework_for_peptide_identification_spark.queries import (
-        BENCH_REGISTRY,
-        REGISTRY,
-    )
-    from apache_hadoop_framework_for_peptide_identification_spark.session import (
-        RUNTIME_CONFS,
-        configure,
-        default_cpus,
-    )
-
-    cpus = str(default_cpus())
-
-    def _builder(name):
-        return (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName(name)
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.showConsoleProgress", "false")
-        )
-
-    b = _builder("shuffle-audit-engine").config(
-        "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-    )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    configure(spark)
-    reader = _UiReader(spark)
-    # Session warm-up (first-query JIT/codegen noise) on a query OUTSIDE
-    # the audit set; bytes attribution starts from the next snapshot.
-    REGISTRY["q40_dedup_exact"].fn(spark, SF_DIR).collect()
-    for q in queries:
-        if q in CUSTOM_FORMS:
-            # setup (index build/encode) runs BEFORE _audit_one's
-            # snapshot, so its stages never enter the measured window
-            run = CUSTOM_FORMS[q](spark)
-            _audit_one(reader, "engine", q, run, results)
-            continue
-        qd = REGISTRY.get(q) or BENCH_REGISTRY[q]
-        _audit_one(
-            reader, "engine", q,
-            lambda qd=qd: (qd.fn(spark, SF_DIR).collect(), False)[1],
-            results,
-        )
-    spark.stop()
-
-    if not args.engine_only:
-        # ------------------------------------------------- stock session
-        import measure_baseline as mb
-        from scale_sweep import _run_budgeted
-
-        spark = (
-            _builder("shuffle-audit-stock")
-            .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-            .getOrCreate()
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        reader = _UiReader(spark)
-        mb.q40_dedup_exact(mb.tables(spark, SF_DIR)).collect()  # warm-up
-        for q in queries:
-            stock_name = STOCK_NAMES.get(q, q)
-            if stock_name is None:
-                print(f"stock  {q}: no stock twin (composition query) — engine-only row", flush=True)
-                continue
-            fn = getattr(mb, stock_name)
-            _audit_one(
-                reader, "stock", q,
-                lambda fn=fn: _run_budgeted(
-                    spark, lambda d: fn(mb.tables(spark, d)), SF_DIR,
-                    args.stock_wall,
-                )[1],
-                results,
-            )
-        spark.stop()
+    with eventlog.event_log() as log_dir:
+        _sessions(args, queries, results, log_dir)
 
     if args.bench:
         # rank by shuffle write; lead with the sweep's one-line verdict

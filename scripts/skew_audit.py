@@ -7,8 +7,8 @@ tests/test_skew.py pins the post-shuffle partition HISTOGRAM on rows
 (plain keying: ~75% of the adversarial fixture in ONE partition;
 salted: max partition ≈ hot/32). This script measures the same story
 in the scheduler's own units — per-task time and shuffle-read bytes
-from the monitoring REST API's taskSummary endpoint — over the stage
-that read the most shuffle bytes during each run.
+from the successful tasks in Spark's event log (scripts/eventlog.py)
+— over the stage that read the most shuffle bytes during each run.
 
 Two probes per (query, side):
 - contract: the bench configuration as-is. The recorded BASELINE.md
@@ -24,10 +24,13 @@ Two probes per (query, side):
   rescue the plain form at this scope (the hot partition sits under
   the 256 MB split threshold) while explicit salting bounds it.
 
-Method: one run per (query, side, probe) — task counts and bytes are
-deterministic per plan; task TIME is single-run indicative (the
-max/median RATIO is the signal, not the absolute). Confs are applied
-per-probe via spark.conf (runtime-settable), same session per side.
+Method: one run per (query, side, probe), each under its own job
+group, read from the event log once the side's session has stopped —
+task counts and bytes are deterministic per plan; task TIME is
+single-run indicative (the max/median RATIO is the signal, not the
+absolute). Engine: session.get_spark; stock:
+measure_baseline.stock_builder. Confs are applied per-probe via
+spark.conf (runtime-settable), same session per side.
 
 Usage: python scripts/skew_audit.py [--queries q168_...,q173_...]
 Prints a markdown table + one JSON line (recorded in BASELINE.md).
@@ -40,13 +43,12 @@ import json
 import os
 import sys
 import time
-import urllib.request
 from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from shuffle_audit import sum_new_stages  # noqa: E402
+import eventlog  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -70,120 +72,64 @@ PROBES = {
 }
 
 
-def dominant_stage(stages: list[dict], seen: set) -> dict | None:
-    """The newly-completed stage with the most shuffle-read bytes (the
+def dominant_stage(stages: list[dict]) -> dict | None:
+    """The stage of a job group with the most shuffle-read bytes (the
     exchange consumer where key skew lands); None when the run had no
     shuffle read at all (fully broadcast plans). Pure — pytested."""
-    best = None
-    for s in stages:
-        if (s["stageId"], s.get("attemptId", 0)) in seen:
-            continue
-        if s.get("status") != "COMPLETE":
-            continue
-        if best is None or s.get("shuffleReadBytes", 0) > best.get("shuffleReadBytes", 0):
-            best = s
-    if best is not None and best.get("shuffleReadBytes", 0) == 0:
-        return None
-    return best
+    best = max(stages, key=lambda s: s["shuffleReadBytes"], default=None)
+    return best if best is not None and best["shuffleReadBytes"] > 0 else None
 
 
-def skew_ratios(summary: dict) -> dict:
-    """Reduce a taskSummary quantile response (quantiles 0/0.5/1.0) to
-    the audit's ratios. Pure — pytested. ``readBytes`` is the REST
-    API's local+remote total (verified live against Spark 4.1)."""
-    run = summary["executorRunTime"]
-    srm = summary.get("shuffleReadMetrics", {})
-    rb = srm.get("readBytes", [0] * len(run))
-    med_t, max_t = run[1], run[2]
-    med_b, max_b = rb[1], rb[2]
+def skew_ratios(tasks: list[tuple[int, int]]) -> dict:
+    """Reduce a stage's successful tasks, ``(run time ms, shuffle bytes
+    read)`` each, to the audit's ratios. The median and max index the
+    sorted values at ``min(floor(q·n), n−1)`` for q = 0.5 and 1.0, as
+    Spark's taskSummary quantiles do. Pure — pytested."""
+    mid = len(tasks) // 2
+    run, rb = (sorted(col) for col in zip(*tasks))
+    med_t, max_t = run[mid], run[-1]
+    med_b, max_b = rb[mid], rb[-1]
     return {
-        "task_time_med_ms": round(med_t, 1),
-        "task_time_max_ms": round(max_t, 1),
+        "task_time_med_ms": med_t,
+        "task_time_max_ms": max_t,
         "task_time_max_over_med": round(max_t / med_t, 1) if med_t > 0 else None,
-        "task_read_med_bytes": int(med_b),
-        "task_read_max_bytes": int(max_b),
+        "task_read_med_bytes": med_b,
+        "task_read_max_bytes": max_b,
         "task_read_max_over_med": round(max_b / med_b, 1) if med_b > 0 else None,
     }
 
 
-class _Rest:
-    def __init__(self, spark) -> None:
-        ui = spark.sparkContext.uiWebUrl
-        if not ui:
-            raise RuntimeError("skew_audit needs spark.ui.enabled=true")
-        app = spark.sparkContext.applicationId
-        self._base = f"{ui}/api/v1/applications/{app}"
-        self._seen: set = set()
-
-    def _get(self, path: str):
-        with urllib.request.urlopen(f"{self._base}{path}", timeout=30) as r:
-            return json.load(r)
-
-    def stages(self) -> list[dict]:
-        return self._get("/stages?status=complete")
-
-    def snapshot(self) -> None:
-        # settle-poll, not a single fetch: the listener bus is async and
-        # a warm-up stage landing a beat later would be mis-attributed
-        # to the first probe (code-review r15 finding)
-        prev = None
-        settled = False
-        for _ in range(20):
-            totals, ids = sum_new_stages(self.stages(), self._seen)
-            if prev == totals:
-                settled = True
-                break
-            prev = totals
-            time.sleep(0.25)
-        if not settled:
-            print(
-                "skew_audit: WARNING — pre-probe stage totals did not settle; "
-                "late-landing stages may be mis-attributed to the next probe",
-                flush=True,
-            )
-        self._seen = ids
-
-    def audit_run(self, fn) -> dict:
-        self.snapshot()
-        t0 = time.perf_counter()
-        fn().collect()
-        wall = time.perf_counter() - t0
-        # listener bus is async: poll until the stage set settles
-        prev = None
-        settled = False
-        for _ in range(20):
-            stages = self.stages()
-            totals, ids = sum_new_stages(stages, self._seen)
-            if prev == totals:
-                settled = True
-                break
-            prev = totals
-            time.sleep(0.25)
-        dom = dominant_stage(stages, self._seen)
-        self._seen = ids
-        out = {"wall_s": round(wall, 2), "shuffle_read_total": totals["shuffleReadBytes"]}
-        if not settled:
-            # visible in the console AND the recorded JSON (ADVICE r15)
-            print(
-                "skew_audit: WARNING — stage totals did not settle within the "
-                "poll budget; this probe's bytes are a lower bound",
-                flush=True,
-            )
-            out["unsettled"] = True
-        if dom is None:
-            out["dominant"] = None  # fully broadcast: no shuffle-read stage
-            return out
-        summ = self._get(
-            f"/stages/{dom['stageId']}/{dom.get('attemptId', 0)}/taskSummary"
-            "?quantiles=0.0,0.5,1.0"
-        )
-        out["dominant"] = {
-            "stage": dom["stageId"],
-            "num_tasks": dom.get("numTasks"),
-            "stage_read_bytes": dom.get("shuffleReadBytes", 0),
-            **skew_ratios(summ),
+def _read(groups, side, walls, results) -> None:
+    for (q, probe), wall in walls.items():
+        key = f"{side}/{probe}"
+        stages = groups[f"{key}:{q}"]["stages"]
+        r = {
+            "wall_s": round(wall, 2),
+            "shuffle_read_total": eventlog.totals(stages)["shuffleReadBytes"],
+            "dominant": None,  # fully broadcast: no shuffle-read stage
         }
-        return out
+        dom = dominant_stage(stages)
+        if dom is not None:
+            r["dominant"] = {
+                "stage": dom["stage"],
+                "num_tasks": dom["num_tasks"],
+                "stage_read_bytes": dom["shuffleReadBytes"],
+                **skew_ratios(dom["tasks"]),
+            }
+        results[q][key] = r
+        print(f"{key:19s} {q}: {json.dumps(r)}", flush=True)
+
+
+def _audit(spark, side, queries, run, walls) -> None:
+    """Each (query, probe) once under the job group ``<side>/<probe>:<q>``."""
+    sc = spark.sparkContext
+    for q in queries:
+        for probe, confs in PROBES.items():
+            with _probe_confs(spark, confs):
+                sc.setJobGroup(f"{side}/{probe}:{q}", q)
+                t0 = time.perf_counter()
+                run(q).collect()
+                walls[(q, probe)] = time.perf_counter() - t0
 
 
 @contextmanager
@@ -234,66 +180,26 @@ def main() -> None:
     if unknown:
         sys.exit(f"skew_audit: unknown queries {unknown} — valid: {QUERIES}")
 
-    from pyspark.sql import SparkSession
-
-    from apache_hadoop_framework_for_peptide_identification_spark.queries import REGISTRY
-    from apache_hadoop_framework_for_peptide_identification_spark.session import (
-        RUNTIME_CONFS,
-        configure,
-        default_cpus,
-    )
-
-    cpus = str(default_cpus())
-    results: dict[str, dict] = {q: {} for q in queries}
-
-    def _builder(name):
-        return (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName(name)
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.showConsoleProgress", "false")
-        )
-
-    # ------------------------------------------------ engine session
-    b = _builder("skew-audit-engine").config(
-        "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-    )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    configure(spark)
-    rest = _Rest(spark)
-    REGISTRY[queries[0]].fn(spark, SF_DIR).collect()  # session warm-up
-    for q in queries:
-        for probe, confs in PROBES.items():
-            with _probe_confs(spark, confs):
-                r = rest.audit_run(lambda q=q: REGISTRY[q].fn(spark, SF_DIR))
-            results[q][f"engine/{probe}"] = r
-            print(f"engine/{probe:12s} {q}: {json.dumps(r)}", flush=True)
-    spark.stop()
-
-    # ------------------------------------------------- stock session
     import measure_baseline as mb
 
-    spark = (
-        _builder("skew-audit-stock")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    rest = _Rest(spark)
-    getattr(mb, queries[0])(mb.tables(spark, SF_DIR)).collect()  # warm-up
-    for q in queries:
-        for probe, confs in PROBES.items():
-            fn = getattr(mb, q)
-            with _probe_confs(spark, confs):
-                r = rest.audit_run(lambda fn=fn: fn(mb.tables(spark, SF_DIR)))
-            results[q][f"stock/{probe}"] = r
-            print(f"stock/{probe:13s} {q}: {json.dumps(r)}", flush=True)
-    spark.stop()
+    from apache_hadoop_framework_for_peptide_identification_spark.queries import REGISTRY
+    from apache_hadoop_framework_for_peptide_identification_spark.session import get_spark
+
+    results: dict[str, dict] = {q: {} for q in queries}
+    with eventlog.event_log() as log_dir:
+        spark = get_spark(app_name="skew-audit-engine")
+        spark.sparkContext.setLogLevel("ERROR")
+        REGISTRY[queries[0]].fn(spark, SF_DIR).collect()  # session warm-up
+        walls: dict[tuple[str, str], float] = {}
+        _audit(spark, "engine", queries, lambda q: REGISTRY[q].fn(spark, SF_DIR), walls)
+        _read(eventlog.stop_and_read(spark, log_dir), "engine", walls, results)
+
+        spark = mb.stock_builder("skew-audit-stock").getOrCreate()
+        spark.sparkContext.setLogLevel("ERROR")
+        getattr(mb, queries[0])(mb.tables(spark, SF_DIR)).collect()  # warm-up
+        walls = {}
+        _audit(spark, "stock", queries, lambda q: getattr(mb, q)(mb.tables(spark, SF_DIR)), walls)
+        _read(eventlog.stop_and_read(spark, log_dir), "stock", walls, results)
 
     print(
         "\n| query | side/probe | wall (s) | dominant stage read | tasks | "
