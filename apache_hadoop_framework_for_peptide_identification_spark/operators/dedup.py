@@ -183,6 +183,49 @@ def _packed_corpus_order(id_c, pos_c):
     return id_c.cast("decimal(38,0)") * two63 + pos_c.cast("decimal(38,0)")
 
 
+def _prefix_posting_index(
+    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The prefix filter's posting index, shared by
+    :func:`prefix_jaccard_pairs` and :func:`containment_prefix_pairs`.
+
+    Returns ``(ordered, prefix, sa, sb)``: ``ordered`` holds one
+    ``(id, sh, __df, __pos, __n)`` row per md5 shingle posting, ranked
+    per document by ascending document frequency ``__df`` (ties by
+    shingle bytes), with ``__n`` the document's shingle count;
+    ``prefix`` keeps each document's first ``__n - ceil(t·__n) + 1``
+    postings; ``sa``/``sb`` are the two verify projections
+    ``(id_a, s_a)`` and ``(__idb, s_b)``.
+    """
+    sh = exploded_shingles(df, id_col, text_col, n)
+    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
+    # Document frequency as a count window over sh: groupBy("sh") plus a
+    # join back re-runs the shingle explode once per consumer and
+    # re-shuffles every posting for the probe anyway, while the window
+    # shuffles the postings by shingle once and counts in place
+    # (measured 1.29 -> 0.88 s for the q121 index build at sf0.1).
+    w = Window.partitionBy("id").orderBy("__df", "sh")
+    ordered = (
+        sh.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
+        .withColumn("__pos", F.row_number().over(w))
+        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("id")))
+    )
+    # The index feeds the prefix join and both verify sides (and the
+    # containment form's full posting side); unmaterialized, each branch
+    # re-scans and re-shingles the corpus from source. Storage is one row
+    # per posting, the operator's working set anyway; measured 0.7x wall
+    # at sf0.1.
+    ordered = materialize(ordered, eager=False)
+    prefix = ordered.filter(
+        F.col("__pos") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
+    )
+    # ordered is 1:1 with sh (the count windows add columns, never rows),
+    # so both verify sides read exact shingle sets
+    sa = ordered.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
+    sb = ordered.select(F.col("id").alias("__idb"), F.col("sh").alias("s_b"))
+    return ordered, prefix, sa, sb
+
+
 def prefix_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -240,31 +283,8 @@ def prefix_jaccard_pairs(
     join — all equi-keyed, never all-pairs. Returns
     (id_a, id_b, jaccard), id_a < id_b.
     """
-    sh = exploded_shingles(df, id_col, text_col, n)
-    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
-    # Document frequency as a count window over sh (r19): the former
-    # groupBy("sh") + join back re-ran the corpus shingle explode
-    # TWICE (once per consumer of `sh`, pre-materialization) and
-    # re-shuffled the full posting volume for the join probe anyway —
-    # the window shuffles the postings by shingle ONCE and counts in
-    # place. Same values, same hot-shingle co-location as the join's
-    # probe side (both hash-cluster every posting of a key into one
-    # partition); measured 1.29 → 0.88 s for the q121 index build at
-    # sf0.1 at identical index content.
-    w = Window.partitionBy("id").orderBy("__df", "sh")
-    ordered = (
-        sh.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
-        .withColumn("__pos", F.row_number().over(w))
-        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("id")))
-    )
-    # The posting index feeds the prefix join AND both verify sides;
-    # without materialization each branch re-scans and re-shingles the
-    # corpus from source. Storage ∝ postings — the operator's working
-    # set; measured 0.7× wall at sf0.1.
-    ordered = materialize(ordered, eager=False)
-    prefix = ordered.filter(
-        F.col("__pos") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    ).select("id", "sh", "__n")
+    _, prefix, sa, sb = _prefix_posting_index(df, id_col, text_col, n, threshold)
+    prefix = prefix.select("id", "sh", "__n")
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
         a.join(
@@ -284,10 +304,6 @@ def prefix_jaccard_pairs(
         )
         .distinct()
     )
-    # verify sides read the SAME checkpointed index (ordered is 1:1
-    # with sh — the count windows add columns, never rows)
-    sa = ordered.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
-    sb = ordered.select(F.col("id").alias("__idb"), F.col("sh").alias("s_b"))
     inter = (
         cand.join(sa, "id_a")
         .join(sb, (F.col("id_b") == F.col("__idb")) & (F.col("s_b") == F.col("s_a")))
@@ -342,27 +358,8 @@ def containment_prefix_pairs(
     BOTH directions evaluated independently (the asymmetry is the
     point: a 20-token crop is contained in its 54-token source at 1.0
     while the reverse direction scores ~0.35)."""
-    sh = exploded_shingles(df, id_col, text_col, n)
-    sh = sh.select("id", F.unhex(F.md5("sh")).alias("sh"))
-    # Document frequency as a count window over sh — one posting
-    # shuffle instead of groupBy + join back (r19; rationale and
-    # measurement at the identical prefix_jaccard_pairs site).
-    w = Window.partitionBy("id").orderBy("__df", "sh")
-    ordered = (
-        sh.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
-        .withColumn("__pos", F.row_number().over(w))
-        .withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("id")))
-    )
-    # The ordered posting index feeds FOUR branches (prefix, full, and
-    # both verify sides); without materialization each branch re-scans
-    # and re-shingles the corpus from source (12 FileScans observed).
-    # Materialized once — storage ∝ postings, which are this
-    # operator's working set anyway; measured 0.68× wall at sf0.1
-    # (BASELINE.md r8 notes).
-    ordered = materialize(ordered, eager=False)
-    prefix = ordered.filter(
-        F.col("__pos") <= F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    ).select(F.col("id").alias("id_a"), "sh", F.col("__n").alias("n_a"))
+    ordered, prefix, sa, sb = _prefix_posting_index(df, id_col, text_col, n, threshold)
+    prefix = prefix.select(F.col("id").alias("id_a"), "sh", F.col("__n").alias("n_a"))
     full = ordered.select(F.col("id").alias("id_b"), "sh", F.col("__n").alias("n_b"))
     a, b = prefix.alias("a"), full.alias("b")
     cand = (
@@ -375,10 +372,6 @@ def containment_prefix_pairs(
         .select("a.id_a", "b.id_b", F.col("a.n_a").alias("n_a"))
         .distinct()
     )
-    # verify sides read the SAME checkpointed index (ordered is 1:1
-    # with sh — the count windows add columns, never rows)
-    sa = ordered.select(F.col("id").alias("id_a"), F.col("sh").alias("s_a"))
-    sb = ordered.select(F.col("id").alias("__idb"), F.col("sh").alias("s_b"))
     inter = (
         cand.join(sa, "id_a")
         .join(sb, (F.col("id_b") == F.col("__idb")) & (F.col("s_b") == F.col("s_a")))

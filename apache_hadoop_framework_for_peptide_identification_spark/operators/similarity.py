@@ -81,7 +81,7 @@ def embedding_neardup_pairs(
     """Exact embedding-cosine near-dup pairs: (id_a, id_b, cos_sim) with
     id_a < id_b and cos_sim >= threshold.
 
-    This is the CORRECTNESS BASELINE — an all-pairs self-join,
+    This is the correctness baseline — an all-pairs self-join,
     inherently quadratic. Use it for validation corpora; the 100 TB
     path is embedding_neardup_lsh below (bucket-bounded shuffle,
     identical per-pair math, recall controlled by bits/bands)."""

@@ -1,14 +1,15 @@
 """Oracle-verified query registry — the driver contract.
 
 Every operator claimed in SURVEY.md §2B registers here as a named query:
-a PySpark builder ``fn(spark, sf_dir) -> DataFrame`` plus (when the
-semantics are ANSI-SQL-expressible) an equivalent DuckDB SQL string the
-driver runs side-by-side at sf0.01. Computed columns are aliased to the
-SAME name on both sides — the comparator sorts columns by name before
-hashing values.
+a PySpark builder ``fn(spark, sf_dir) -> DataFrame`` plus an equivalent
+DuckDB SQL string the driver runs side-by-side at sf0.01. Computed
+columns are aliased to the SAME name on both sides — the comparator
+sorts columns by name before hashing values.
 
 Registration is import-driven: importing this package pulls in every
 query module, so ``__spark_entry__.queries()`` is just ``spark_fns()``.
+``REGISTRY`` iterates in registration order: the module import order at
+the bottom of this file, then decorator order within each module.
 """
 
 from __future__ import annotations
@@ -25,52 +26,44 @@ from ..operators.reliability import materialize
 class QueryDef:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL; None => driver runs rows-only check
-    doc: str = ""
+    oracle: str | None  # DuckDB SQL; None only for BENCH_REGISTRY forms
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
-# Benchmark-only forms, NOT exposed to the verification driver (r10 —
-# the registry-capacity decision, VERDICT r9 item 3 option (a)): the
+# Benchmark-only forms, not exposed through the driver contract: the
 # four rows-only bench headliners (q42 MinHash-LSH candidates, q43
 # FNV-SimHash, q45 LSH-ANN, q67 hyperplane-LSH near-dup) have no SQL
-# oracle BY DESIGN (probabilistic candidate sets at bench scope) while
-# each one's machinery is hash-verified through an oracle sibling
-# (q113/q120/q118/q114). Keeping them in the driver registry spent 4
-# window slots per rotation cycle on a rows-only signal; here they stay
-# benchmarked (bench.py resolves BENCH_REGISTRY too) and locally tested
-# (tests/test_oracle_queries.py smoke-runs them every round) without
-# consuming driver capacity.
+# oracle by design (probabilistic candidate sets at bench scope), and
+# REGISTRY holds only oracle-verified queries. Each one's machinery is
+# hash-verified through an oracle sibling (q113/q120/q118/q114); the
+# forms stay benchmarked (bench.py resolves BENCH_REGISTRY too) and
+# smoke-run by tests/test_oracle_queries.py.
 BENCH_REGISTRY: dict[str, QueryDef] = {}
 
 
-def query(name: str, oracle: str | None = None, doc: str = ""):
-    """Register a query builder under ``name`` with an optional oracle."""
-
+def _register(registry: dict[str, QueryDef], name: str, oracle: str | None):
     def deco(fn):
         if name in REGISTRY or name in BENCH_REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QueryDef(name, fn, oracle, doc or (fn.__doc__ or ""))
+        registry[name] = QueryDef(name, fn, oracle)
         return fn
 
     return deco
 
 
-def bench_query(name: str, doc: str = ""):
+def query(name: str, oracle: str):
+    """Register a query builder under ``name`` with its DuckDB oracle."""
+    return _register(REGISTRY, name, oracle)
+
+
+def bench_query(name: str):
     """Register a benchmark-only query: runs in bench.py and the local
-    rows-only smoke sweep, never graded by the external driver. Reserve
-    for forms whose semantics are deliberately un-oracle-able AND whose
-    machinery holds a hash verdict through a sibling registry query —
-    both facts belong in the docstring."""
-
-    def deco(fn):
-        if name in REGISTRY or name in BENCH_REGISTRY:
-            raise ValueError(f"duplicate query name: {name}")
-        BENCH_REGISTRY[name] = QueryDef(name, fn, None, doc or (fn.__doc__ or ""))
-        return fn
-
-    return deco
+    rows-only smoke sweep, never exposed through the driver contract.
+    Reserve for forms whose semantics are deliberately un-oracle-able
+    AND whose machinery holds a hash verdict through a sibling registry
+    query — both facts belong in the docstring."""
+    return _register(BENCH_REGISTRY, name, None)
 
 
 def materialized_sort(df: DataFrame, *cols) -> DataFrame:
@@ -112,7 +105,7 @@ def spark_fns() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sqls() -> dict[str, str]:
-    return {q.name: q.oracle for q in REGISTRY.values() if q.oracle is not None}
+    return {q.name: q.oracle for q in REGISTRY.values()}
 
 
 # Import-for-side-effect: each module registers its queries.
@@ -127,226 +120,5 @@ from . import sources_q  # noqa: E402,F401
 from . import pipeline_q  # noqa: E402,F401
 from . import corpus_q  # noqa: E402,F401
 from . import graph_q  # noqa: E402,F401
-from . import sql_surface  # noqa: E402,F401  (wired r6 — was orphaned since r3)
+from . import sql_surface  # noqa: E402,F401
 from . import analytics_q  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-visible ordering.
-#
-# The external verification driver records CORRECTNESS verdicts for the
-# first _DRIVER_WINDOW registry entries in registration order (observed in
-# rounds 1 and 2).  Registration order is the lever we control, so each
-# round the window rotates.  Everything outside the window is still
-# verified every round by the local oracle sweep
-# (tests/test_oracle_queries.py parametrizes over the FULL registry at
-# sf0.001/sf0.01, and `make sweep-sf01` at sf0.1) — rotation trades WHICH
-# queries get a fresh *driver* verdict, never whether they are verified.
-#
-# Rounds 3–7 hand-authored the window each round; the r7 VERDICT/ADVICE
-# flagged the structural flaw: the moment the driver commits the round's
-# CORRECTNESS file, the hand-authored window is one round behind and the
-# staleness guard (tests/test_driver_rotation.py) goes red until the next
-# round's builder rotates by hand.  Round 8 makes the rotation
-# SELF-ROTATING: the window is computed at import time from the
-# CORRECTNESS_r*.json history itself, with the r4-onward assembly rule
-# encoded as code instead of prose:
-#   (0) never-driver-verified queries FIRST — new operators never wait a
-#       round for their first driver verdict;
-#   (1) queries whose implementation or oracle changed this round
-#       (_CHANGED_THIS_ROUND — the one hand-maintained pin list, cleared
-#       or rewritten each round) — a stale green verdict must never mask
-#       a current change;
-#   (2) all remaining slots to the OLDEST driver verdicts, oldest round
-#       first, ties broken by query number (deterministic across runs
-#       and CWDs — the history is read from files next to this package,
-#       not the process CWD).
-# When the driver lands CORRECTNESS_r08.json, the next import recomputes
-# and the window IS the round-9 rotation — the tree stays green at round
-# close, the failure mode ADVICE r7 item 1 described.  Capacity stays the
-# builder's own math: ≤ _DRIVER_WINDOW × (MAX_AGE + 1) = 200 queries.
-#
-# CAPACITY POLICY (r10 — VERDICT r9 item 3). The 200-query ceiling is
-# structural: every registered query needs a window slot at least every
-# MAX_AGE+1 = 4 rounds, and the window is 50. The standing policy:
-#   (a) The four deliberately-oracle-less bench forms (q42/q43/q45/q67)
-#       are retired from this registry into BENCH_REGISTRY — still
-#       benchmarked and smoke-tested every round, sibling-hash-verified
-#       (q113/q120/q118/q114), no longer consuming 4 slots per cycle.
-#       Driver registry after retirement + q177: 172.
-#   (b) Growth is capped at ≤5 new driver queries per round while the
-#       registry is ≤185, ≤3 while ≤194, and 0 at ≥200 — enforced by
-#       the headroom assertion below, which fails the import (and the
-#       whole test suite) before a round can overshoot. New queries are
-#       reserved for genuinely new operator rows (the reference surface
-#       is complete; additions are production-gap LLM-pipeline ops),
-#       never for variants an existing oracle already proves.
-#   (c) A new form whose machinery an existing query already
-#       hash-verifies registers as bench_query (or as a pytest), not as
-#       a driver query.
-# AT-CAPACITY POLICY (r19 — VERDICT r18 item 3, recorded BEFORE it
-# binds). q203's registration makes the registry 198 of 200 and closes
-# the declared surface: all 10 reference behaviors and the full
-# LLM-pipeline extension (crawl ladder, dedup ladder, ANN stack,
-# training-prep, both capstones) now hold driver seats. The rule from
-# here:
-#   (d) The surface is DECLARED COMPLETE — growth defaults to ZERO.
-#       The 2 residual slots are reserved for SEMANTIC REPAIRS only
-#       (a contract row whose semantics must change incompatibly
-#       enough to need a fresh name), never for new coverage.
-#   (e) If a genuinely new operator row ever demands a seat, the
-#       pre-approved retirement ladder (docs/COVERAGE.md) executes
-#       FIRST, in order: q149 → q121 → q105 — each a scale/bench
-#       variant whose row keeps at least one oracle-verified sibling
-#       (q148; q107+q147+q165; q156) — moving to BENCH_REGISTRY with
-#       the standing q42/q43/q45/q67 treatment (still benchmarked,
-#       still smoke-tested every round).
-# tests/test_driver_rotation.py forward-simulates two rounds of maximum
-# policy growth on top of the live history and asserts the age bound
-# holds — the ceiling can never arrive as a surprise — and
-# test_at_capacity_policy pins rule (d)/(e): the residual-slot math and
-# the liveness of every ladder rung and its named siblings.
-_DRIVER_WINDOW = 50
-_MAX_AGE = 3  # driver-verdict age bound; tests/test_driver_rotation.py
-_CAPACITY = _DRIVER_WINDOW * (_MAX_AGE + 1)  # 200
-
-
-def _policy_growth_cap(registry_size: int) -> int:
-    """Max NEW driver queries the capacity policy allows next round."""
-    if registry_size >= _CAPACITY:
-        return 0
-    if registry_size > 194:
-        return min(3, _CAPACITY - registry_size)
-    if registry_size > 185:
-        return 3
-    return 5
-
-# Queries whose implementation or oracle changed in round
-# _CHANGED_IN_ROUND and therefore must take a fresh driver verdict even
-# if their last verdict is recent.  Rewritten each round (update BOTH
-# the list and the round number); a pin expires automatically once the
-# query holds a verdict from _CHANGED_IN_ROUND or later — the driver
-# has then graded the changed implementation and the slot goes back to
-# the oldest-first rotation.
-_CHANGED_IN_ROUND = 19
-_CHANGED_THIS_ROUND = [
-    # No pins — and this round that is forced, not lazy. r19 is the
-    # first OPTIMIZATION round: 34 registered queries took results-
-    # identical plan changes (materialize-before-fan-out lazy
-    # localCheckpoints, the final-sort sampler guard, the posting-df
-    # count window, the pagerank union-zeros/broadcast forms — every
-    # one re-proven against the DuckDB oracle locally this round, see
-    # OPTIMIZATION_r19.md). The window cannot pin ANY of them: the
-    # r15 verdict cohort (47 queries) hits the age bound this round
-    # and must seat, q203 (never-verified) auto-heads, and the 2
-    # remaining slots must pre-seat the oldest r16 verdicts or the
-    # forward simulation strands them at round 20 (the at-capacity
-    # registry has zero pin slack — test_capacity_policy_two_rounds
-    # _out proves it). Six changed queries (q135 q137 q140 q147 q149
-    # q173) seat via the r15 cohort anyway; the rest hold r16–r18
-    # verdicts and rotate to fresh ones within the standing ≤3-round
-    # bound, with this round's local oracle sweep as the interim
-    # guarantee — exactly the situation the oldest-first rule covers.
-]
-
-
-def _verdict_history() -> dict[str, int]:
-    """Latest driver-verdict round per query, from CORRECTNESS_r*.json.
-
-    Reads the files from the repository root (two levels above this
-    package), NOT the process CWD — the driver imports __spark_entry__
-    from a foreign CWD (observed r5).
-    """
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    latest: dict[str, int] = {}
-    for path in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)", path)
-        if m is None:
-            continue  # glob-matching but unnumbered filename
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                names = _json.load(fh)
-        except (OSError, ValueError):
-            continue  # a malformed artifact must not break imports
-        if not isinstance(names, dict):
-            continue  # valid JSON, wrong shape — same rule
-        for name in names:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _compute_driver_priority(
-    latest: dict[str, int] | None = None,
-    names: list[str] | None = None,
-) -> list[str]:
-    """Window for the verdict history ``latest`` (read from disk when
-    None) over the query set ``names`` (the live registry when None).
-    Both parameters exist so tests can FORWARD-SIMULATE: feed the
-    history as it will look after this round's verdict file lands —
-    and, for the capacity-policy simulation, a registry grown by
-    hypothetical future queries — and assert the recomputed window
-    still satisfies the age bound."""
-    assert len(set(_CHANGED_THIS_ROUND)) == len(_CHANGED_THIS_ROUND), "duplicate pins"
-    unknown = [n for n in _CHANGED_THIS_ROUND if n not in REGISTRY]
-    assert not unknown, f"pinned names not in registry: {unknown}"
-
-    if latest is None:
-        latest = _verdict_history()
-    if names is None:
-        names = list(REGISTRY)
-    name_set = set(names)
-
-    def qnum(name: str) -> int:
-        import re as _re
-
-        m = _re.match(r"q(\d+)", name)
-        return int(m.group(1)) if m else 10**9
-
-    never = sorted((n for n in names if n not in latest), key=qnum)
-    # A pin is satisfied (and its slot freed) once the query holds a
-    # verdict from the pin's round or later — the driver has then
-    # graded the changed implementation.
-    pinned = [
-        n
-        for n in _CHANGED_THIS_ROUND
-        if n in name_set and n not in never and n in latest and latest[n] < _CHANGED_IN_ROUND
-    ]
-    head = never + pinned
-    assert len(head) <= _DRIVER_WINDOW, (
-        f"{len(never)} never-verified + {len(pinned)} pinned queries exceed the "
-        f"{_DRIVER_WINDOW}-slot driver window — ship fewer new queries this round"
-    )
-    rest = sorted(
-        (n for n in names if n not in set(head)),
-        key=lambda n: (latest[n], qnum(n)),
-    )
-    return (head + rest)[:_DRIVER_WINDOW]
-
-
-def _reorder_registry() -> None:
-    # Guardrails (ADVICE round 2): the rotation must exactly fill the
-    # driver's verification window with real, distinct names.
-    assert len(REGISTRY) <= _CAPACITY, (
-        f"driver registry ({len(REGISTRY)}) exceeds the structural capacity "
-        f"{_CAPACITY} = window {_DRIVER_WINDOW} × (age bound {_MAX_AGE} + 1) — "
-        "verdicts WILL go stale; retire queries to BENCH_REGISTRY or stop adding"
-    )
-    priority = _compute_driver_priority()
-    assert len(priority) == min(_DRIVER_WINDOW, len(REGISTRY)), "window underfilled"
-    assert len(set(priority)) == len(priority), "duplicate priority entries"
-    ordered: dict[str, QueryDef] = {}
-    for name in priority:
-        ordered[name] = REGISTRY[name]
-    for name, qdef in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = qdef
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder_registry()

@@ -2595,12 +2595,8 @@ def q199_ann_ivfpq_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Registered r17 (staged + oracle-verified in r16: the r16 window's slots
-# went to the 47-query r12 re-verification cohort + q197–q199, and the
-# self-rotating capacity math allowed exactly one new driver query this
-# round — this one). tests/test_similarity.py::
-# test_ivfpq_recall_form_matches_oracle keeps running the driver's own
-# compare at sf0.001 AND sf0.01 beside the driver verdict.
+# tests/test_similarity.py::test_ivfpq_recall_form_matches_oracle also runs
+# this oracle compare at sf0.001 AND sf0.01.
 Q200_ORACLE = """
 WITH c0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             FROM embeddings WHERE vec_id % 61 = 7

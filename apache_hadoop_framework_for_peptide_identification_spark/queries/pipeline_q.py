@@ -368,8 +368,8 @@ def q90_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding on both sides because banker's rounding differs across
     engines; the oracle match proves the quantized bytes are
     reproducible anywhere. The quantized vector is serialized to a
-    comma-joined string for the driver compare (CORRECTNESS_r03 showed
-    the harness canonicalizer cannot sort raw array columns); q92
+    comma-joined string for the driver compare (the driver's
+    canonicalizer cannot sort raw array columns); q92
     consumes the real array<tinyint> downstream."""
     emb = _t(spark, sf_dir, "embeddings")
     return (

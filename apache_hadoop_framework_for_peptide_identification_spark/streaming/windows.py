@@ -441,19 +441,17 @@ def _neardup_ingest_batch(
     return pairs.schema
 
 
+# Every ingest-store substore layout: the near-dup and ladder substores
+# and the crawl store's url_keepers. Absent substores are skipped, so one
+# list serves every store.
+INGEST_SUBSTORES = ("postings", "texts", "pairs", "keepers", "tiers", "url_keepers")
+
+
 def compact_ingest_store(
     spark: SparkSession,
     store_dir: str,
     through_batch: int | None = None,
-    substores: tuple[str, ...] = (
-        # absent substores are skipped, so the default covers every
-        # ingest-store layout: the neardup/ladder substores AND the
-        # r17 crawl store (url_keepers) — omitting the latter made the
-        # documented parameterless threshold loop read compactable=0
-        # forever on a crawl store (r17 review finding)
-        "postings", "texts", "pairs", "keepers", "tiers", "url_keepers",
-    ),
-    target_partitions: int = 1,
+    substores: tuple[str, ...] = INGEST_SUBSTORES,
     assume_atomic_rename: bool = False,
 ) -> dict:
     """Compact a stream-ingest store's ``batch_id=N`` partitions
@@ -464,11 +462,13 @@ def compact_ingest_store(
     so a long-running stream pays O(batches²) partition opens — this
     rewrites all partitions with batch_id ≤ ``through_batch`` into a
     single consolidated ``batch_id=through_batch`` partition per
-    substore (``target_partitions`` files). Row content is preserved
+    substore (one file each). Row content is preserved
     exactly; only the layout column moves — compacted rows thereafter
     report the horizon's batch_id, so per-batch ATTRIBUTION of
     historical rows is deliberately folded (the stores' consumers key
     on content columns; batch_id exists for replay pruning).
+    ``substores`` defaults to :data:`INGEST_SUBSTORES`; absent ones are
+    skipped.
 
     Replay safety is structural: ``through_batch`` must be strictly
     below the store's max batch id (default ``max - 1``) — foreachBatch
@@ -629,7 +629,7 @@ def compact_ingest_store(
             )
             if fs.exists(tmp_p):
                 fs.delete(tmp_p, True)
-            src.drop("batch_id").repartition(target_partitions).write.parquet(tmp_dir)
+            src.drop("batch_id").repartition(1).write.parquet(tmp_dir)
         rows = spark.read.parquet(tmp_dir).count()
         for b in in_scope:
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{sub_dir}/batch_id={b}"), True)
@@ -644,24 +644,14 @@ def compact_ingest_store(
     return out
 
 
-def ingest_store_fragmentation(
-    spark,
-    store_dir: str,
-    substores: tuple[str, ...] = (
-        # absent substores are skipped, so the default covers every
-        # ingest-store layout: the neardup/ladder substores AND the
-        # r17 crawl store (url_keepers) — omitting the latter made the
-        # documented parameterless threshold loop read compactable=0
-        # forever on a crawl store (r17 review finding)
-        "postings", "texts", "pairs", "keepers", "tiers", "url_keepers",
-    ),
-) -> dict:
-    """Fragmentation signal for a stream-ingest store (r17 — VERDICT
-    r16 item 5: q197 proved the stop-compact-resume CADENCE; this is
-    the sensor that decides WHEN, so a production loop triggers
-    compaction on a threshold instead of a guess). Pure filesystem
-    listing — one listStatus per substore, no Spark job, no parquet
-    footer reads — cheap enough to call between micro-batches.
+def ingest_store_fragmentation(spark, store_dir: str) -> dict:
+    """Fragmentation signal for a stream-ingest store: the sensor that
+    decides WHEN to compact (q197 replays the stop-compact-resume
+    cadence), so a production loop triggers compaction on a threshold
+    instead of a guess. Pure filesystem
+    listing — one listStatus per substore of :data:`INGEST_SUBSTORES`
+    (absent ones are skipped), no Spark job, no parquet footer reads —
+    cheap enough to call between micro-batches.
 
     Returns::
 
@@ -691,7 +681,7 @@ def ingest_store_fragmentation(
     compact_ingest_store, which raises — mutation needs the guard,
     observation doesn't)."""
     per_sub: dict[str, list[int]] = {}
-    for sub in substores:
+    for sub in INGEST_SUBSTORES:
         batches = _batch_ids(spark, f"{store_dir}/{sub}")
         if batches is not None:
             per_sub[sub] = batches

@@ -237,9 +237,10 @@ def main() -> None:
 
 
 def _run_budgeted(spark, fn, d, wall: float) -> tuple[float, bool]:
-    """Run one collect under a hard wall-clock kill: a watchdog thread
-    cancels the caller's job group at ``wall`` seconds (the caller sets
-    it with interruptOnCancel), so a mis-projected scope costs at most
+    """Run one collect under a hard wall-clock kill: from ``wall``
+    seconds on, a watchdog thread cancels the caller's job group every
+    0.5 s until the call returns (the caller sets the group with
+    interruptOnCancel), so a mis-projected scope costs at most
     the wall, not an unbounded quadratic run. The group is left as the
     caller set it, so its jobs stay attributed to it. Returns (elapsed,
     aborted). Only a failure AFTER the watchdog actually fired counts
@@ -256,9 +257,15 @@ def _run_budgeted(spark, fn, d, wall: float) -> tuple[float, bool]:
     fired = threading.Event()
 
     def killer() -> None:
-        if not ev.wait(wall):
-            fired.set()
+        if ev.wait(wall):
+            return
+        fired.set()
+        # A cancel before the collect has submitted its first job finds
+        # nothing to cancel, so keep cancelling until the call returns.
+        while True:
             sc.cancelJobGroup(group)
+            if ev.wait(0.5):
+                return
 
     th = threading.Thread(target=killer, daemon=True)
     th.start()
@@ -272,6 +279,7 @@ def _run_budgeted(spark, fn, d, wall: float) -> tuple[float, bool]:
         raise
     finally:
         ev.set()
+        th.join()  # no cancel may land on the caller's next job
 
 
 def _report(queries, results, notes) -> None:

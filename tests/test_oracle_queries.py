@@ -10,15 +10,19 @@ import pytest
 from tests.conftest import SF_ORACLE
 from tests.oracle import compare
 
-from apache_hadoop_framework_for_peptide_identification_spark.queries import BENCH_REGISTRY, REGISTRY
-
-ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle)
-# Rows-only coverage: driver-registry queries without an oracle, plus
-# the bench-only forms (q42/q43/q45/q67 — retired from the driver
-# registry r10 per the capacity policy, still smoke-run every round).
-WEAK_QUERIES = sorted(
-    [n for n, q in REGISTRY.items() if not q.oracle] + list(BENCH_REGISTRY)
+from apache_hadoop_framework_for_peptide_identification_spark.queries import (
+    BENCH_REGISTRY,
+    REGISTRY,
+    bench_query,
+    oracle_sqls,
+    query,
+    spark_fns,
 )
+
+ORACLE_QUERIES = sorted(REGISTRY)
+# Rows-only coverage: the bench-only forms (q42/q43/q45/q67), which have
+# no oracle by design.
+WEAK_QUERIES = sorted(BENCH_REGISTRY)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
@@ -32,11 +36,27 @@ def test_query_matches_oracle(spark, duck, name):
 
 @pytest.mark.parametrize("name", WEAK_QUERIES)
 def test_weak_query_runs(spark, name):
-    q = REGISTRY.get(name) or BENCH_REGISTRY[name]
+    q = BENCH_REGISTRY[name]
     df = q.fn(spark, SF_ORACLE)
     rows = df.count()
     assert rows >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_registry_contract():
+    before = (dict(REGISTRY), dict(BENCH_REGISTRY))
+    assert not set(REGISTRY) & set(BENCH_REGISTRY)
+    taken = [next(iter(REGISTRY)), next(iter(BENCH_REGISTRY))]
+    for name in taken:
+        with pytest.raises(ValueError, match="duplicate query name"):
+            query(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
+        with pytest.raises(ValueError, match="duplicate query name"):
+            bench_query(name)(lambda spark, sf_dir: None)
+    with pytest.raises(TypeError):
+        query("q_registry_contract_probe")
+    assert set(spark_fns()) == set(REGISTRY)
+    assert set(oracle_sqls()) == set(REGISTRY)
+    assert (dict(REGISTRY), dict(BENCH_REGISTRY)) == before
 
 
 def test_entry_smoke(spark):

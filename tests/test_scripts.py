@@ -14,6 +14,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
 
 from eventlog import FIELDS, parse, totals  # noqa: E402
@@ -176,20 +178,32 @@ def test_stock_builder_reads_cpus_and_driver_heap(monkeypatch):
     assert mb.stock_builder("stock-probe")._options["spark.driver.memory"] == "8g"
 
 
-def test_run_budgeted_cancels_the_callers_group(spark):
+@pytest.mark.parametrize(
+    "build_s, wall, udf_s, bound",
+    [(0.0, 5.0, 60, 30), (2.0, 0.5, 20, 15)],
+    ids=["running_job", "before_first_job"],
+)
+def test_run_budgeted_cancels_the_callers_group(spark, build_s, wall, udf_s, bound):
     """The wall-clock kill cancels the job group its caller set and leaves
-    it set, so the run's jobs stay attributed to the caller's group."""
+    it set, so the run's jobs stay attributed to the caller's group. A
+    wall that fires while the builder is still on the driver (no job
+    submitted yet) must still cancel the job that follows."""
     import time
 
     from pyspark.sql import functions as F
     from scale_sweep import _run_budgeted
 
     sc = spark.sparkContext
-    slow = F.udf(lambda x: time.sleep(60) or x, "long")
+    slow = F.udf(lambda x: time.sleep(udf_s) or x, "long")
+
+    def build(d):
+        time.sleep(build_s)
+        return spark.range(1).select(slow("id"))
+
     sc.setJobGroup("budget-probe", "wall probe", True)
     try:
-        sec, aborted = _run_budgeted(spark, lambda d: spark.range(1).select(slow("id")), None, 5.0)
-        assert aborted and sec < 30
+        sec, aborted = _run_budgeted(spark, build, None, wall)
+        assert aborted and sec < bound
         assert sc.getLocalProperty("spark.jobGroup.id") == "budget-probe"
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
